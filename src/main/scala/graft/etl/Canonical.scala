@@ -110,10 +110,10 @@ object Canonical {
   val targetSchema: StructType =
     StructType(fields.map(f => StructField(f.snake, f.dataType, nullable = f.snake == "subway_time")))
 
-  /** A26 — the final typed cast for one snake-named column: cast → domain
-    * clamp → null fill. Ref: `src/utils/types_transform.py:7-90`. */
-  def castExpr(f: Field): Column = {
-    val base = col(f.snake).try_cast(f.dataType)
+  /** A26 — the final typed cast of `src` to field `f`: cast → domain clamp →
+    * null fill, named `f.snake`. Ref: `src/utils/types_transform.py:7-90`. */
+  def castExpr(f: Field, src: Column): Column = {
+    val base = src.try_cast(f.dataType)
     val clamped = f.domain match {
       case Some(dom) => EtlFunctions.enumDomain(base, dom,
         if (dom.contains("Unknown")) "Unknown" else "UNKNOWN")

@@ -17,6 +17,12 @@ import graft.functions.EtlFunctions
   * shuffle); the final cast is a projection. At 100 TB the only exchange in
   * the whole plan is the dedup — and it's skipped for platforms without a
   * dedup key.
+  *
+  * After the dedup, each step is one analyzer pass: one select of the
+  * derivations and one conjunctive required-field filter per platform, one
+  * aligning select per platform in the merge, one select for the final
+  * cast. [[runReport]] builds the per-platform frames once; its emptiness
+  * probe and its load run those same frames.
   */
 object Pipeline {
 
@@ -29,8 +35,10 @@ object Pipeline {
   /** Generic per-platform transform (replaces the reference's 3 hand-written
     * transformer classes, `src/etl/transformation.py:20-537`). Order of
     * operations mirrors the reference: dedup first (A22), then column
-    * derivations, then required-field drop (A23) — Catalyst will push the
-    * IsNotNull filters down through the projections anyway (§4.1). */
+    * derivations, then required-field drop (A23) as one conjunctive filter —
+    * Catalyst pushes its IsNotNull conjuncts down through the projection
+    * anyway (§4.1). A key group whose first row lacks a required field
+    * therefore contributes no row: keep-first picks before the filter. */
   def transform(raw: DataFrame, spec: PlatformSpec, now: Column = current_timestamp()): DataFrame = {
     // A22 — deterministic keep-first on input order.
     val deduped = spec.dedupKey match {
@@ -51,61 +59,79 @@ object Pipeline {
         case f if exprs.contains(f.pretty) => exprs(f.pretty).as(f.pretty)
       } :+ lit(spec.platformId).as("platform_id") :+ now.as("created_at"): _*)
     // A23 — required-field filter.
-    spec.required.foldLeft(derived)((df, c) => df.filter(col(c).isNotNull))
+    if (spec.required.isEmpty) derived
+    else derived.filter(spec.required.map(c => col(c).isNotNull).reduce(_ && _))
   }
 
-  /** A25 — schema-align union: add missing canonical columns as nulls,
-    * UNION ALL (never a join), rename pretty → snake.
-    * Ref: `src/etl/merging.py:6-28` + `src/utils/mapping.py`. */
+  /** A25 — schema-align union: one select per frame adds the missing
+    * canonical columns as typed nulls and renames pretty → snake, then
+    * UNION ALL (never a join). Ref: `src/etl/merging.py:6-28` +
+    * `src/utils/mapping.py`. */
   def merge(frames: Seq[DataFrame]): DataFrame = {
     require(frames.nonEmpty, "merge of zero frames")
     val aligned = frames.map { df =>
       val have = df.columns.toSet
-      val withAll = Canonical.fields.foldLeft(df) { (d, f) =>
-        if (have.contains(f.pretty)) d
-        else d.withColumn(f.pretty, lit(null).cast(f.dataType))
-      }
-      withAll.select(Canonical.prettyNames.map(col): _*)
+      df.select(Canonical.fields.map { f =>
+        val c = if (have(f.pretty)) col(f.pretty) else lit(null).cast(f.dataType)
+        c.as(f.snake)
+      }: _*)
     }
-    val unioned = aligned.reduce(_.unionByName(_))
-    unioned.select(Canonical.fields.map(f => col(f.pretty).as(f.snake)): _*)
+    aligned.reduce(_.unionByName(_))
   }
 
   /** A26 + A27 — final typed cast to the DWH schema plus the deterministic
-    * UUIDv5 record key. Ref: `src/utils/types_transform.py:7-90`. */
+    * UUIDv5 record key, in one select. Ref: `src/utils/types_transform.py:7-90`. */
   def finalCast(df: DataFrame): DataFrame = {
-    val withUid = df.withColumn("uid",
-      EtlFunctions.uuid5Key(col("listing_id").try_cast("long"), col("platform_id").try_cast("int")))
-    withUid.select(Canonical.fields.map(Canonical.castExpr): _*)
+    val uid = EtlFunctions.uuid5Key(
+      col("listing_id").try_cast("long"), col("platform_id").try_cast("int"))
+    df.select(Canonical.fields.map(f =>
+      Canonical.castExpr(f, if (f.snake == "uid") uid else col(f.snake))): _*)
   }
 
-  /** The one assembly path: per-platform transform (with an optional
-    * post-transform hook — identity for [[run]], metric observation for
-    * [[runReport]]) → merge → final cast. Keeping a single builder is what
-    * guarantees run, runReport, and the streaming foreachBatch deployment
-    * can never diverge in staging order or merge semantics. */
-  private def assemble(rawByPlatform: Map[String, DataFrame], now: Column,
-      post: (String, DataFrame) => DataFrame = (_, df) => df): DataFrame = {
-    val transformed = rawByPlatform.toSeq.sortBy(_._1).map { case (name, raw) =>
-      post(name, transform(raw, PlatformSpecs.byName(name), now))
+  /** The per-platform transforms in staging order (platform name). */
+  private def transformAll(rawByPlatform: Map[String, DataFrame],
+      now: Column): Seq[(String, DataFrame)] =
+    rawByPlatform.toSeq.sortBy(_._1).map { case (name, raw) =>
+      name -> transform(raw, PlatformSpecs.byName(name), now)
     }
+
+  /** The one assembly path over transformed frames: merge → final cast.
+    * [[run]], [[runReport]] and the streaming foreachBatch deployment all
+    * go through it, so they can never diverge in staging order or merge
+    * semantics. */
+  private def assemble(transformed: Seq[DataFrame]): DataFrame =
     finalCast(merge(transformed))
-  }
 
   /** Full run over pre-loaded raw frames (extract is the caller's concern —
     * see Tables.csv / Tables.tableIfExists for the tolerant A1/A2 readers). */
   def run(rawByPlatform: Map[String, DataFrame],
       now: Column = current_timestamp()): DataFrame =
-    assemble(rawByPlatform, now)
+    assemble(transformAll(rawByPlatform, now).map(_._2))
 
   /** The reference's run report (`src/etl/datapipeline.py:110-189`): a
-    * status + per-stage row counts. Counts come from `Observation` metrics
-    * attached to the lineage, so they are collected DURING the single load
-    * action — the reference pays a `len(df)` materialization per stage;
-    * here no extra pass, no extra action, works identically on a cluster. */
+    * status + per-stage row counts. */
   final case class RunReport(status: String, message: String,
       rowsByPlatform: Map[String, Long], totalRows: Long)
 
+  /** Transform, probe for emptiness, then hand the observed unified frame to
+    * `load`. The per-platform frames are built once; the probe and the load
+    * run those same frames.
+    *
+    * Emptiness is checked BEFORE the sink runs, like the reference — a
+    * truncate-and-reload sink must never execute for an empty run and then
+    * have the report claim "no_data" as if nothing happened. merge and
+    * finalCast never drop rows, so the unified frame is empty exactly when
+    * every platform frame is. The probe runs one limit-1 job per platform
+    * frame it checks and stops at the first non-empty one. Frames without a
+    * dedup key go first: their plan has no exchange, so the check reads
+    * only up to the first kept row. Dedup frames are checked only if all of
+    * those are empty, and after their dedup, as loaded — keep-first runs
+    * before the required-field filter.
+    *
+    * Counts come from `Observation` metrics attached to the same platform
+    * frames and to the unified frame, so they are collected DURING the load
+    * action — the reference pays a `len(df)` materialization per stage;
+    * here the counts add no pass and work identically on a cluster. */
   def runReport(rawByPlatform: Map[String, DataFrame],
       now: Column = current_timestamp(),
       metricsTimeout: scala.concurrent.duration.Duration =
@@ -113,17 +139,16 @@ object Pipeline {
       load: DataFrame => Unit): RunReport = {
     if (rawByPlatform.isEmpty)
       return RunReport("no_data", "No platforms returned data.", Map.empty, 0L)
-    // Emptiness is checked BEFORE the sink runs (one limit-1 job over an
-    // unobserved twin of the lineage), like the reference — a truncate-and-
-    // reload sink must never execute for an empty run and then have the
-    // report claim "no_data" as if nothing happened.
-    if (assemble(rawByPlatform, now).isEmpty)
+    val transformed = transformAll(rawByPlatform, now)
+    val probeOrder = transformed.sortBy { case (name, _) =>
+      PlatformSpecs.byName(name).dedupKey.isDefined }
+    if (probeOrder.forall { case (_, df) => df.isEmpty })
       return RunReport("no_data", "Unified DataFrame is empty.", Map.empty, 0L)
     val perPlatform = rawByPlatform.keys.map(p =>
       p -> org.apache.spark.sql.Observation(s"rows_$p")).toMap
     val totalObs = org.apache.spark.sql.Observation("rows_total")
-    val unified = assemble(rawByPlatform, now,
-        (name, df) => df.observe(perPlatform(name), count(lit(1)).as("n")))
+    val unified = assemble(transformed.map { case (name, df) =>
+        df.observe(perPlatform(name), count(lit(1)).as("n")) })
       .observe(totalObs, count(lit(1)).as("n"))
     try {
       load(unified)
@@ -183,16 +208,21 @@ object Pipeline {
       directives: Map[String, Directive]): Map[String, Option[String]] = {
     val p = new org.apache.hadoop.fs.Path(folder)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val rx = """(\w+)_(\d{8})\.csv$""".r
+    // the whole name must match, as in the reference's `^...$` pattern
+    val rx = """(\w+)_(\d{8})\.csv""".r
     val latest: Map[String, String] =
       if (!fs.exists(p)) Map.empty
       else fs.listStatus(p).toSeq
-        .flatMap(st => rx.findFirstMatchIn(st.getPath.getName).map(m => (m.group(1), m.group(2))))
+        .flatMap(st => st.getPath.getName match {
+          case rx(platform, date) => Some((platform, date))
+          case _ => None
+        })
         .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap // A4: max(date) per platform
     directives.map {
       case (pl, Skip) => pl -> None
       case (pl, Latest) => pl -> latest.get(pl)
-      // explicit date honored only if present and <= latest (A5 semantics)
+      // explicit date honored only if the platform has a file and the date
+      // is <= its latest (A5 semantics); no file for that date is required
       case (pl, Exact(d)) => pl -> latest.get(pl).filter(_ >= d).map(_ => d)
     }
   }

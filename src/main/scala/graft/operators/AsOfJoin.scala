@@ -42,10 +42,8 @@ object AsOfJoin {
     val packed = unioned.withColumn("__carry",
       last(when(col("__side") === 0, struct(carry.map(col): _*)),
         ignoreNulls = true).over(w))
-    val unpacked = carry.foldLeft(packed) { (df, c) =>
-      df.withColumn(c,
-        when(col(keyCol).isNotNull, col("__carry").getField(c)))
-    }
+    val unpacked = packed.withColumns(carry.map(c =>
+      c -> when(col(keyCol).isNotNull, col("__carry").getField(c))).toMap)
     unpacked.filter(col("__side") === 1).drop("__side", "__carry")
   }
 
@@ -67,10 +65,8 @@ object AsOfJoin {
     val packed = unioned.withColumn("__carry",
       first(when(col("__side") === 1, struct(carry.map(col): _*)),
         ignoreNulls = true).over(w))
-    val unpacked = carry.foldLeft(packed) { (df, c) =>
-      df.withColumn(c,
-        when(col(keyCol).isNotNull, col("__carry").getField(c)))
-    }
+    val unpacked = packed.withColumns(carry.map(c =>
+      c -> when(col(keyCol).isNotNull, col("__carry").getField(c))).toMap)
     unpacked.filter(col("__side") === 0).drop("__side", "__carry")
   }
 

@@ -197,6 +197,82 @@ class EtlPipelineSpec extends SparkSpec {
     assert(failed.status == "error" && failed.message.contains("sink down"))
   }
 
+  test("emptiness probe: a dedup platform is empty when each key group's first row is dropped") {
+    // keep-first runs BEFORE the required-field filter: the group's first
+    // row lacks Price, so the later duplicate that has it is never kept
+    val firstLacksPrice = strDF(yandexCols, Seq(
+      Seq("//realty.yandex.ru/offer/777/", null, "48", "Москва, Тверская 5", "2", "4",
+        "first", "2024-12-05 11:00:00", "NEW_FLAT", "12", "37.61", "55.76",
+        null, null, null, "[]", "AGENT", "2.7", "30", null),
+      Seq("//realty.yandex.ru/offer/777/", "6100000", "48", "Москва, Тверская 5", "2", "4",
+        "dup", "2024-12-06 11:00:00", "SECONDARY", "12", "37.61", "55.76",
+        null, null, null, "[]", "OWNER", "2.7", "30", "6000000")))
+    val report = Pipeline.runReport(Map("yandex" -> firstLacksPrice), now = fixedNow)(
+      _ => fail("sink must not run for an empty unified frame"))
+    assert(report.status == "no_data" && report.totalRows == 0L)
+  }
+
+  test("emptiness probe: an emptied no-dedup platform does not hide a non-empty dedup one") {
+    val out = java.nio.file.Files.createTempDirectory("etl-probe").toString
+    val report = Pipeline.runReport(
+      Map("domclick" -> domclickRaw.filter(col("Price").isNull), "avito" -> avitoRaw),
+      now = fixedNow)(df => df.write.mode("overwrite").parquet(out))
+    assert(report.status == "success")
+    assert(report.rowsByPlatform == Map("domclick" -> 0L, "avito" -> 1L))
+    assert(report.totalRows == 1L)
+    assert(spark.read.parquet(out).count() == 1L)
+  }
+
+  test("run report: before the sink runs, one job at most and no shuffle write") {
+    // Guards the emptiness probe against a return of the full pre-pass: with
+    // a non-empty platform that has no dedup key, the probe is a single
+    // limit-1 job with no exchange, so the dedup shuffles run only in the load.
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler._
+    val phaseKey = "graft.test.etl.phase"
+    val jobPhase = new ConcurrentHashMap[Int, String]()
+    val stagePhase = new ConcurrentHashMap[Int, String]()
+    val shuffleWritten = new ConcurrentHashMap[Int, java.lang.Long]()
+    val loadDone = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(phaseKey))).foreach { ph =>
+          jobPhase.put(e.jobId, ph)
+          e.stageIds.foreach(stagePhase.put(_, ph))
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        shuffleWritten.put(e.stageInfo.stageId,
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      // the bus delivers in order: once a load job has ended, every event
+      // of the jobs before the sink has been delivered too
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobPhase.get(e.jobId) == "load") loadDone.countDown()
+    }
+    val sc = spark.sparkContext
+    val out = java.nio.file.Files.createTempDirectory("etl-guard").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(phaseKey, "pre")
+      val report = Pipeline.runReport(
+        Map("domclick" -> domclickRaw, "yandex" -> yandexRaw, "avito" -> avitoRaw),
+        now = fixedNow) { df =>
+        sc.setLocalProperty(phaseKey, "load")
+        df.write.mode("overwrite").parquet(out)
+      }
+      assert(report.status == "success" && report.totalRows == 5L)
+      assert(loadDone.await(60, TimeUnit.SECONDS), "no load job end event")
+    } finally {
+      sc.setLocalProperty(phaseKey, null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val preJobs = jobPhase.asScala.filter(_._2 == "pre").keys
+    val preStages = stagePhase.asScala.filter(_._2 == "pre").keys
+    val preShuffle = preStages.toSeq.map(s => Option(shuffleWritten.get(s)).fold(0L)(_.longValue)).sum
+    assert(preJobs.size <= 1, s"${preJobs.size} jobs ran before the sink")
+    assert(preShuffle == 0L, s"stages before the sink wrote $preShuffle shuffle bytes")
+  }
+
   test("the full pipeline runs unchanged per micro-batch under streaming") {
     // foreachBatch is the streaming deployment of the reference's pipeline:
     // every stage — keep-first window dedup, derivations, required filter,
