@@ -20,13 +20,12 @@ import org.apache.spark.sql.DataFrame
   * trained PQ codebook), [[graft.operators.Similarity.refreshIvfCentroids]]
   * (ss05's coarse quantizer),
   * [[graft.operators.TextAnalysis.refreshBigramVocabs]] (tx15/tx16's
-  * subword vocab),
-  * [[graft.operators.Dedup.refreshBloomSketches]] (dd08's existing-corpus
-  * Bloom — on a GROWING corpus this one is correctness-relevant, see its
-  * staleness note), and
+  * subword vocab), and
   * [[graft.operators.Layout.resetRefusedCounters]] (the refusal-metric
   * registry, which otherwise grows by one Observation per capped-builder
-  * invocation).
+  * invocation). The fingerprinted store [[graft.sources.Artifacts]]
+  * (table schemas, dd08's Bloom sketch) needs no such call: it rebuilds an
+  * artifact whenever its path's listing fingerprint changes.
   *
   * LOCALCHECKPOINT FRAMES (r19/r20): many builders now pin intermediates
   * with `localCheckpoint(eager = false)` instead of a tracked cache

@@ -64,7 +64,7 @@ object BloomMightContainBroadcast {
     * `eval`, every executor for generated code) pays `readFrom` once per
     * sketch, not once per task. Values are SOFT references: a deserialized
     * filter at production sizing is MBs-GBs, one per sketch GENERATION
-    * (`refreshBloomSketches` on a growing corpus, stream restarts), and a
+    * (a rebuilt dd08 sketch on a grown corpus, stream restarts), and a
     * plain strong map would strand every superseded generation for the
     * JVM's lifetime — including on executors, which no driver-side refresh
     * hook can reach. Soft values let the collector reclaim superseded

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchExprs
+import graft.sources.Tables
 import graft.sources.Tables.table
 
 /** Deduplication operators for a training-data pipeline, designed for
@@ -637,11 +638,11 @@ object Dedup {
     val idx = dd11IndexPath(s, dir)
     val batch = fuzzySigs(batchDocs)
     val batchBands = bandedBuckets(batch)
-    val sh = s.read.parquet(s"$idx/sh")
+    val sh = Tables.parquet(s, s"$idx/sh")
       .unionByName(batch.select(col("doc_id"), col("sh")))
     val batchIds = batch.select(col("doc_id"))
     // probe side = batch bands only; build side = corpus index ∪ batch
-    val allBands = s.read.parquet(s"$idx/bands").unionByName(batchBands)
+    val allBands = Tables.parquet(s, s"$idx/bands").unionByName(batchBands)
     val cand = batchBands
       .select(col("band"), col("bucket"), col("doc_id").as("id_p"))
       .join(allBands.select(col("band"), col("bucket"), col("doc_id").as("id_q")),
@@ -732,7 +733,7 @@ object Dedup {
     // this filter prunes the batch half at file-listing time (asserted
     // by the PartitionFilters plan test), so the corpus-hash derivation
     // reads exactly the slice a production corpus-only index would hold.
-    val corpusH = s.read.parquet(s"$idx/wins")
+    val corpusH = Tables.parquet(s, s"$idx/wins")
       .filter(col("par") === 0)
       .select("h").distinct()
     // ONE h-keyed exchange pins the classified occurrence frame for its
@@ -1004,7 +1005,7 @@ object Dedup {
       // and pay one column-pruned index scan per consumer instead.
       val idx = ddWinIndexPath(s, dir)
       val wins = graft.Caches.track(
-        s.read.parquet(s"$idx/wins")
+        Tables.parquet(s, s"$idx/wins")
           .select(col("doc_id"), col("pos"), col("h"))
           .repartition(col("h")))
       val dupH = wins.groupBy("h")
@@ -1027,7 +1028,7 @@ object Dedup {
           sum(col("e") - col("s") + K).cast("int").as("n_cut_tokens"))
       val dupCounts = dupOcc.groupBy("doc_id")
         .agg(count(lit(1)).cast("int").as("n_dup_windows"))
-      s.read.parquet(s"$idx/docs")
+      Tables.parquet(s, s"$idx/docs")
         .select(col("doc_id"),
           greatest(col("n_ws") - (K - 1), lit(0)).cast("int").as("n_windows"))
         .join(dupCounts, Seq("doc_id"), "left")
@@ -1061,7 +1062,7 @@ object Dedup {
       // each set's ordered pairs map-side. At 100 TB the internal key
       // would be xxhash64 (no string materialization), md5 kept here so
       // DuckDB can mirror it.
-      val byH = s.read.parquet(s"${ddWinIndexPath(s, dir)}/wins")
+      val byH = Tables.parquet(s, s"${ddWinIndexPath(s, dir)}/wins")
         .select(col("source"), col("h"))
         .groupBy("h")
         .agg(array_sort(collect_set(col("source"))).as("ss"))
@@ -1106,7 +1107,7 @@ object Dedup {
       // matrix, the dup-rank and the canonical lookup (dd12's
       // cache-boundary note applies verbatim).
       val wins = graft.Caches.track(
-        s.read.parquet(s"${ddWinIndexPath(s, dir)}/wins")
+        Tables.parquet(s, s"${ddWinIndexPath(s, dir)}/wins")
           .repartition(col("h")))
       // ONE aggregation pass over the cached window frame feeds BOTH the
       // source-set side (dd13's matrix inputs) and the dup-hash side
@@ -1203,9 +1204,9 @@ object Dedup {
     "dd15_contained_docs" -> ((s, dir) => {
       val K = substringK
       val idx = ddWinIndexPath(s, dir)
-      val wins = s.read.parquet(s"$idx/wins")
+      val wins = Tables.parquet(s, s"$idx/wins")
         .select("doc_id", "is_rep", "pos", "h")
-      val docs = s.read.parquet(s"$idx/docs")
+      val docs = Tables.parquet(s, s"$idx/docs")
         .select("doc_id", "n_ws", "fp", "rnk", "csz")
       // SEQUENCE-CLASS collapse: docs with identical normalized token
       // sequences (the sidecar fp) share every containment relation, so
@@ -1295,8 +1296,8 @@ object Dedup {
     "dd16_index_stats" -> ((s, dir) => {
       val idx = ddWinIndexPath(s, dir)
       indexStats(
-        s.read.parquet(s"$idx/wins").select("source", "h"),
-        s.read.parquet(s"$idx/docs").select("source", "n_ws", "fp"))
+        Tables.parquet(s, s"$idx/wins").select("source", "h"),
+        Tables.parquet(s, s"$idx/docs").select("source", "n_ws", "fp"))
     }),
 
     // Index REFRESH contract — the remaining lifecycle question for a
@@ -1313,9 +1314,9 @@ object Dedup {
     // — runs ONCE into a delta-sized tracked cache, which is exactly the
     // materialized delta a real merge writes before appending it.
     "dd19_refreshed_stats" -> ((s, dir) => {
-      val winsC = s.read.parquet(s"${ddWinIndexPath(s, dir)}/wins")
+      val winsC = Tables.parquet(s, s"${ddWinIndexPath(s, dir)}/wins")
         .filter(col("par") === 0).select("source", "h")
-      val docsC = s.read.parquet(s"${ddWinIndexPath(s, dir)}/docs")
+      val docsC = Tables.parquet(s, s"${ddWinIndexPath(s, dir)}/docs")
         .filter(col("doc_id") % 2 === 0).select("source", "n_ws", "fp")
       val toks = batchToks(s, dir) // shared tokenize (r20) — see its doc
       val winsB = graft.Caches.track(batchWindows(toks).select("source", "h"))
@@ -1376,7 +1377,7 @@ object Dedup {
     "dd18_batch_novelty" -> ((s, dir) => {
       val K = substringK
       val idx = ddWinIndexPath(s, dir)
-      val corpusH = s.read.parquet(s"$idx/wins")
+      val corpusH = Tables.parquet(s, s"$idx/wins")
         .filter(col("par") === 0) // partition-directory prune, see dd17
         .select("h").distinct()
       // ONE aggregation over the batch's window frame carries the whole
@@ -1461,40 +1462,27 @@ object Dedup {
         defaultSimhashBucketCap)
         .orderBy("id_a", "id_b")))
 
-  /** dd08's existing-corpus Bloom sketch per dir, memoized per process:
-    * ~KB of broadcast INDEX state whose distributed build (one
-    * aggregate over the existing fingerprints) would otherwise repeat per
-    * invocation — the exact lifecycle of the PQ codebook / IVF centroid
-    * memos in [[Similarity]]. A production incremental-dedup service
-    * builds the corpus Bloom once per index generation and serves with
-    * it; the batch side is what changes per run.
+  /** dd08's existing-corpus Bloom sketch: ~KB of broadcast INDEX state
+    * whose distributed build (one aggregate over the existing
+    * fingerprints) would otherwise repeat per invocation. A production
+    * incremental-dedup service builds the corpus Bloom once per index
+    * generation and serves with it; the batch side is what changes per run.
     *
-    * STALENESS ASSUMPTION: same contract as `Similarity.embCounts` —
-    * keyed by dir, never refreshed; correct for immutable snapshot dirs.
-    * A corpus APPENDED to under a live session keeps pre-filtering with
-    * the old sketch: rows matching NEW corpus entries pass the Bloom
-    * stage as "maybe dup" misses... no — they pass as definite-new and
-    * SKIP the join, which would wrongly keep them. So unlike the codebook
-    * memo (quality drift only), a stale dd08 sketch is a CORRECTNESS
-    * hazard on a growing corpus — call [[refreshBloomSketches]] after
-    * appending, alongside the other refresh hooks in
-    * [[graft.Caches]]'s housekeeping note. */
-  private val bloomSketches =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.broadcast.Broadcast[Array[Byte]]]()
-
-  /** Drop memoized dd08 Bloom sketches so the next plan rebuilds (see the
-    * staleness note on `bloomSketches` — on a growing corpus this one is
-    * correctness-relevant, not just freshness-relevant). Old broadcasts
-    * are left for the ContextCleaner: an in-flight query may still be
-    * probing one, so destroying eagerly here would be a use-after-free. */
-  def refreshBloomSketches(): Unit = bloomSketches.clear()
-
-  /** The memoized existing-corpus Bloom sketch, sized from the corpus
-    * count at 8 bits/item (fpp ~2%): the count rides the same memo build,
-    * so sizing tracks the index like a production fp-index row count
-    * would. The head() materializes broadcast-sized index state, like the
-    * PQ codebook's collect().
+    * The sketch is the [[graft.sources.Artifacts]] entry "dd08.bloom" of
+    * `documents.parquet`, keyed by its listing fingerprint plus the
+    * application id (a broadcast is owned by its SparkContext, so a
+    * restarted context in the same JVM is never served a dead handle). A
+    * stale sketch would be a CORRECTNESS hazard, not just drift: a batch
+    * row matching a corpus entry the sketch lacks passes the Bloom stage as
+    * definite-new, skips the anti-join and is wrongly kept. An appended or
+    * rewritten corpus changes the fingerprint, so the next plan rebuilds
+    * the sketch; superseded broadcasts are left for the ContextCleaner,
+    * since an in-flight query may still be probing one.
+    *
+    * Sizing is from the corpus count at 8 bits/item (fpp ~2%): the count
+    * rides the same build, so sizing tracks the index like a production
+    * fp-index row count would. The head() materializes broadcast-sized
+    * index state, like the PQ codebook's collect().
     *
     * The sketch ships as a BROADCAST VARIABLE read by
     * [[graft.functions.BloomMightContainBroadcast]], never as a plan
@@ -1507,15 +1495,11 @@ object Dedup {
     * (subquery results, never inline), and it is the only transport that
     * survives real index scale (MBs-GBs of Bloom bits): bytes move
     * torrent-style once per executor, the plan holds a handle.
-    * `BloomBroadcastSpec` pins the no-large-literal property.
-    *
-    * Memo keyed by (applicationId, dir): a broadcast is owned by its
-    * SparkContext, so a restarted context in the same JVM must not be
-    * served a dead handle. */
+    * `BloomBroadcastSpec` pins the no-large-literal property. */
   private[graft] def bloomSketch(
       s: SparkSession,
       dir: String): org.apache.spark.broadcast.Broadcast[Array[Byte]] =
-    bloomSketches.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, { _ =>
+    graft.sources.Artifacts.getOrBuild(s, s"$dir/documents.parquet", "dd08.bloom") {
       import org.apache.spark.sql.graftbridge.ColumnBridge.{column => C, expression => E}
       val base = table(s, dir, "documents")
         .select(col("doc_id"), md5(lower(trim(col("text"))).cast("binary")).as("fp"))
@@ -1526,7 +1510,7 @@ object Dedup {
           E(lit(items)), E(lit(items * 8))).toAggregateExpression())
       s.sparkContext.broadcast(
         base.agg(bfAgg.as("bf")).head().getAs[Array[Byte]](0))
-    })
+    }
 
   /** Per-(band, chunk) bucket cap for [[simhashCandidates]]. 512 keeps every
     * organic sf0.1 bucket (max observed 179; dd04 output is bit-identical

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.EtlFunctions._
+import graft.sources.Tables
 import graft.sources.Tables.table
 
 /** The reference's ETL primitives (SURVEY.md §2 Part A) exercised as declared
@@ -268,7 +269,7 @@ object EtlQueries {
     // round-trip included — lang travels through directory names).
     "e17_partition_prune" -> ((s, dir) => {
       val path = e17PartitionedPath(s, dir)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("lang") === "en")
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")

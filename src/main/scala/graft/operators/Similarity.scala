@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
 import graft.sources.Tables.table
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -1439,7 +1440,7 @@ object Similarity {
     // probe, not the build. Byte-identical to the recompute form; the
     // oracle deliberately re-derives the full chain.
     "qp08_graph_dedup_manifest" -> ((s, dir) =>
-      graphDedupManifest(s.read.parquet(knnGraphArtifactPath(s, dir)), emb(s, dir))),
+      graphDedupManifest(Tables.parquet(s, knnGraphArtifactPath(s, dir)), emb(s, dir))),
 
     // Product-quantization ANN (PQ + asymmetric distance): 64 dims → 8
     // subspaces × 16 centroids, trained with two deterministic Lloyd

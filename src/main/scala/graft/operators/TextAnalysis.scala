@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
 import graft.sources.Tables.table
 
 /** Text-analysis operators for a training-data pipeline: language ID
@@ -537,7 +538,7 @@ object TextAnalysis {
     "qp07_eval_screen" -> ((s, dir) => {
       val K = Dedup.substringK
       val idx = Dedup.ddWinIndexPath(s, dir)
-      val wins = s.read.parquet(s"$idx/wins").select("doc_id", "source", "h")
+      val wins = Tables.parquet(s, s"$idx/wins").select("doc_id", "source", "h")
       val trainAgg = wins.filter(col("doc_id") % 10 =!= 0)
         .groupBy("h", "source").agg(count(lit(1)).as("n_occ"))
       val evalW = wins.filter(col("doc_id") % 10 === 0)
@@ -551,7 +552,7 @@ object TextAnalysis {
         .groupBy(col("eval_id").as("eval_doc_id"))
         .agg(count(lit(1)).as("n_near_dup_train"),
           max("jaccard").as("max_jaccard"))
-      s.read.parquet(s"$idx/docs")
+      Tables.parquet(s, s"$idx/docs")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id").as("eval_doc_id"),
           greatest(col("n_ws") - (K - 1), lit(0)).cast("int").as("n_windows"))
@@ -751,13 +752,13 @@ object TextAnalysis {
     "tx30_substring_decontam" -> ((s, dir) => {
       val K = Dedup.substringK
       val idx = Dedup.ddWinIndexPath(s, dir)
-      val wins = s.read.parquet(s"$idx/wins")
+      val wins = Tables.parquet(s, s"$idx/wins")
         .select(col("doc_id"), col("pos"), col("h"))
       val evalH = wins.filter(col("doc_id") % 10 === 0).select("h").distinct()
       val occ = wins.filter(col("doc_id") % 10 =!= 0)
         .join(evalH, Seq("h"), "left_semi")
       contamSpanStats(occ, K)
-        .join(s.read.parquet(s"$idx/docs")
+        .join(Tables.parquet(s, s"$idx/docs")
           .select(col("doc_id"),
             greatest(col("n_ws") - (K - 1), lit(0)).cast("int").as("n_windows")),
           "doc_id")
@@ -803,7 +804,7 @@ object TextAnalysis {
     // aggregate. All exact integers — hash-exact.
     "tx32_contam_attribution" -> ((s, dir) => {
       val idx = Dedup.ddWinIndexPath(s, dir)
-      val wins = s.read.parquet(s"$idx/wins").select("doc_id", "source", "h")
+      val wins = Tables.parquet(s, s"$idx/wins").select("doc_id", "source", "h")
       val trainAgg = wins.filter(col("doc_id") % 10 =!= 0)
         .groupBy("h", "source")
         .agg(count(lit(1)).as("n_occ"))
@@ -879,7 +880,7 @@ object TextAnalysis {
     // integer counts + one int/int IEEE division — hash-exact.
     "tx35_novelty" -> ((s, dir) => {
       val idx = Dedup.ddWinIndexPath(s, dir)
-      val wins = s.read.parquet(s"$idx/wins").select("doc_id", "h")
+      val wins = Tables.parquet(s, s"$idx/wins").select("doc_id", "h")
       val global = wins.groupBy("h").agg(count(lit(1)).as("n_occ"))
       wins.join(global, "h")
         .groupBy("doc_id")
@@ -1644,7 +1645,7 @@ object TextAnalysis {
     * TextAnalysisSpec asserts the sequence equality. */
   private[graft] def refreshedVocab(s: SparkSession, dir: String): Seq[String] = {
     val art = vocabArtifactPath(s, dir)
-    s.read.parquet(s"$art/counts")
+    Tables.parquet(s, s"$art/counts")
       .unionByName(bigramCounts(
         table(s, dir, "documents").filter(col("doc_id") % 2 === 1)))
       .groupBy("g").agg(sum("c").as("c"))
@@ -1877,13 +1878,13 @@ object TextAnalysis {
     val surv = Dedup.fuzzyDedupSurvivors(gated).select("doc_id")
       .filter(col("doc_id") % evalMod =!= 0)
     val idx = Dedup.ddWinIndexPath(s, dir)
-    val wins = s.read.parquet(s"$idx/wins")
+    val wins = Tables.parquet(s, s"$idx/wins")
       .select(col("doc_id"), col("pos"), col("h"))
     val evalH = wins.filter(col("doc_id") % evalMod === 0).select("h").distinct()
     val occ = wins.join(surv, Seq("doc_id"), "left_semi")
       .join(evalH, Seq("h"), "left_semi")
     val sized = surv
-      .join(s.read.parquet(s"$idx/docs").select("doc_id", "n_ws"), "doc_id")
+      .join(Tables.parquet(s, s"$idx/docs").select("doc_id", "n_ws"), "doc_id")
       .join(contamSpanStats(occ, K).select("doc_id", "n_cut_tokens"),
         Seq("doc_id"), "left")
       .na.fill(0, Seq("n_cut_tokens"))
@@ -1913,7 +1914,7 @@ object TextAnalysis {
   private[graft] def contamOccPerDoc(
       s: SparkSession, dir: String, evalMod: Int): DataFrame = {
     val idx = Dedup.ddWinIndexPath(s, dir)
-    val wins = s.read.parquet(s"$idx/wins")
+    val wins = Tables.parquet(s, s"$idx/wins")
       .select(col("doc_id"), col("pos"), col("h"))
     val evalH = wins.filter(col("doc_id") % evalMod === 0).select("h").distinct()
     wins.filter(col("doc_id") % evalMod =!= 0)

@@ -129,7 +129,7 @@ object EventWindows {
     // dd17's islands pass.
     "st08_substring_ingest" -> ((s, dir) => {
       val Dd = graft.operators.Dedup
-      val corpusH = s.read.parquet(s"${Dd.ddWinIndexPath(s, dir)}/wins")
+      val corpusH = Tables.parquet(s, s"${Dd.ddWinIndexPath(s, dir)}/wins")
         .filter(col("par") === 0) // partition-directory prune, see dd17
         .select("h").distinct()
       Stateful.ingestSubstringCut(
@@ -174,7 +174,7 @@ object EventWindows {
     // serving path is provably the batch analysis query. Hash-exact.
     "st10_decontam_gate_ingest" -> ((s, dir) => {
       val Dd = graft.operators.Dedup
-      val evalH = s.read.parquet(s"${Dd.ddWinIndexPath(s, dir)}/wins")
+      val evalH = Tables.parquet(s, s"${Dd.ddWinIndexPath(s, dir)}/wins")
         .filter(col("par") === 0) // eval ids are % 10 == 0 -> all even
         .filter(col("doc_id") % 10 === 0)
         .select("h").distinct()
@@ -202,7 +202,7 @@ object EventWindows {
     // (shares tx32's oracle verbatim).
     "st11_attribution_ingest" -> ((s, dir) => {
       val Dd = graft.operators.Dedup
-      val trainAgg = s.read.parquet(s"${Dd.ddWinIndexPath(s, dir)}/wins")
+      val trainAgg = Tables.parquet(s, s"${Dd.ddWinIndexPath(s, dir)}/wins")
         .filter(col("doc_id") % 10 =!= 0)
         .groupBy("h", "source")
         .agg(count(lit(1)).as("n_occ"))
@@ -286,7 +286,7 @@ object EventWindows {
       val Dd = graft.operators.Dedup
       val Sk = graft.functions.SketchExprs
       val idx = Dd.ddWinIndexPath(s, dir)
-      val trainAggH = s.read.parquet(s"$idx/wins")
+      val trainAggH = Tables.parquet(s, s"$idx/wins")
         .filter(col("doc_id") % 10 =!= 0)
         .groupBy("h", "source").agg(count(lit(1)).as("n_occ"))
         .groupBy("h").agg(sum("n_occ").as("occ_h"),

@@ -158,7 +158,8 @@ object Stateful {
     *
     * STALENESS: the sketch covers the static corpus as of broadcast time;
     * on an APPENDED corpus rebuild + re-broadcast and restart the query
-    * (same contract as [[graft.operators.Dedup.refreshBloomSketches]],
+    * (the batch form, [[graft.operators.Dedup.bloomSketch]], rebuilds on
+    * its own when the corpus's listing fingerprint changes;
     * correctness-relevant, not just freshness). */
   /** Streaming near-dup ingest — the SIMILARITY-family analogue of
     * [[incrementalDedupBloom]]: each arriving embedding probes the static

@@ -58,39 +58,31 @@ class BloomBroadcastSpec extends SparkSpec {
     assert((0L until 5000L by 2).forall(bcForm(_)))
   }
 
-  test("stale sketch on a grown corpus IS the documented hazard; refresh fixes it") {
-    // The bloomSketches memo scaladoc claims a stale sketch on a GROWING
-    // corpus is a correctness hazard (a batch row matching a NEW corpus
-    // entry passes the Bloom stage as definite-new and skips the
-    // anti-join, wrongly kept) and that refreshBloomSketches() is the
-    // append hook. Prove both halves.
-    import graft.sources.Tables
+  test("a grown corpus rebuilds the sketch with no refresh call") {
+    // A stale sketch on a GROWING corpus is a correctness hazard: a batch
+    // row matching a NEW corpus entry passes the Bloom stage as
+    // definite-new, skips the anti-join and is wrongly kept. The sketch is
+    // keyed by documents.parquet's listing fingerprint, so rewriting the
+    // corpus must rebuild it with no refresh call.
     val tmp = java.nio.file.Files.createTempDirectory("dd08grow").toString
     def write(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("s"))
         .withColumn("n_chars", length($"text").cast("long"))
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    // generation 1: no cross-half duplicates -> memoized sketch lacks
+    // generation 1: no cross-half duplicates -> the first sketch lacks
     // every interesting fingerprint
     write(Seq((0L, "alpha"), (1L, "bravo"), (2L, "charlie"), (3L, "delta")))
     assert(Dedup.queries("dd08_bloom_incremental")(spark, tmp).count() == 2)
     // generation 2 (appended): doc 11 duplicates NEW existing doc 10
     write(Seq((0L, "alpha"), (1L, "bravo"), (2L, "charlie"), (3L, "delta"),
       (10L, "echo"), (11L, "echo")))
-    val stale = Dedup.queries("dd08_bloom_incremental")(spark, tmp)
+    val grown = Dedup.queries("dd08_bloom_incremental")(spark, tmp)
       .collect().map(_.getLong(0)).toSet
-    assert(stale.contains(11L),
-      "expected the stale sketch to wrongly keep doc 11 - the documented " +
-        "hazard did not reproduce (did the memo key change?)")
-    Dedup.refreshBloomSketches()
-    val fresh = Dedup.queries("dd08_bloom_incremental")(spark, tmp)
-      .collect().map(_.getLong(0)).toSet
-    assert(!fresh.contains(11L), "refreshed sketch still kept the duplicate")
-    // and refreshed dd08 again equals dd07 on the grown corpus
+    assert(!grown.contains(11L), "a stale sketch kept the duplicate doc 11")
     val dd07 = Dedup.queries("dd07_incremental_dedup")(spark, tmp)
       .collect().map(_.getLong(0)).toSet
-    assert(fresh == dd07)
+    assert(grown == dd07)
   }
 
   test("null hash in, null out (and interpreted eval agrees with codegen)") {

@@ -27,4 +27,21 @@ class SourceHygieneSpec extends AnyFunSuite {
       .toList
     assert(bad.isEmpty, s"control characters in sources:\n${bad.mkString("\n")}")
   }
+
+  test("engine packages read parquet only through Tables.parquet (no inference job per read)") {
+    // Tables.parquet reads with the schema memoized by the path's listing
+    // fingerprint; a direct read.parquet infers it with an eager Spark job
+    // in every builder call.
+    val pkgs = Seq("operators", "streaming", "multimodal", "etl", "functions")
+      .map(p => Paths.get("src/main/scala/graft", p))
+    pkgs.foreach(p => assert(Files.isDirectory(p), s"expected to run from the repo root, no $p here"))
+    val bad = pkgs.flatMap(p => Files.walk(p).iterator().asScala.toList)
+      .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(".read.parquet(") => s"$p:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(bad.isEmpty, s"direct parquet reads (use Tables.parquet):\n${bad.mkString("\n")}")
+  }
 }
