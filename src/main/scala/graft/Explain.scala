@@ -25,6 +25,19 @@ object Explain {
 
 /** One place for the engine's session defaults (Verify/Bench/Explain). */
 object Sessions {
+  /** `spark.sql.codegen.cache.maxEntries`: the generated classes one JVM
+    * keeps compiled. Spark's default is 100, and the cache is LRU, so a
+    * working set larger than the cache recompiles on almost every access.
+    * Sized from two counts of distinct generated classes, taken with a
+    * cache large enough to hold them all (sf0.01, `local[4]`): one checked
+    * `query_suite` pass of `perfbench` compiles 198, and one full
+    * `graft.Verify` pass 2,587 (its `codegen_compiles` summed; 3,083 with
+    * the cache at 1,000 and 5,166 at 100). This holds the full suite with
+    * ≈1.5x headroom. Holding those 2,587 classes costs ≈19 MB of metaspace,
+    * ≈8 KB per class: metaspace after a full GC at the end of the pass,
+    * 10,000 entries against 100. */
+  val CodegenCacheEntries: Int = 4000
+
   def build(app: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     SparkSession.builder()
@@ -52,6 +65,7 @@ object Sessions {
       // (i.e. inside the repo checkout when the driver runs the mains)
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .getOrCreate()
   }
 }

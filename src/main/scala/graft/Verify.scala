@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -13,6 +14,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -23,12 +25,16 @@ object Verify {
       // over the 80+ query run. The pending count is printed BEFORE the
       // release so a builder-cache leak is visible in the round artifacts
       // (a query that registers caches shows its own count; a LEAK is a
-      // nonzero count on a query that doesn't).
+      // nonzero count on a query that doesn't). codegen_compiles counts the
+      // generated classes the query compiled (codegen cache misses), so a
+      // query that recompiles on every call shows up too.
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       val refused = operators.Layout.refusedRows
       val refusedNote =
         if (refused.isEmpty) ""
         else refused.map { case (t, n) => s"$t=$n" }.mkString(" cap_refused{", ",", "}")
-      System.err.println(s"[verify] $name caches_pending=${Caches.pending}$refusedNote")
+      System.err.println(
+        s"[verify] $name caches_pending=${Caches.pending} codegen_compiles=$compiles$refusedNote")
       operators.Layout.resetRefusedCounters()
       spark.catalog.clearCache()
       Caches.releaseAll()

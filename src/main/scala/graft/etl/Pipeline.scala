@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.EtlFunctions
+import graft.functions.{EtlFunctions, RunStamp}
 
 /** The end-to-end unification pipeline: extract → transform → merge →
   * final-cast → load (reference `src/etl/datapipeline.py:60-189`), rebuilt
@@ -23,6 +23,13 @@ import graft.functions.EtlFunctions
   * aligning select per platform in the merge, one select for the final
   * cast. [[runReport]] builds the per-platform frames once; its emptiness
   * probe and its load run those same frames.
+  *
+  * `now` is the value of every row's `created_at`. By default it is a
+  * [[graft.functions.RunStamp]] taken on the driver when [[transform]],
+  * [[run]] or [[runReport]] is called: one value per run, like the
+  * reference's eager `now` (`src/etl/transformation.py:165,325,495-496`).
+  * The stamp is read by reference in generated code, so repeated runs reuse
+  * the compiled classes. Pass a fixed timestamp column to pin it.
   */
 object Pipeline {
 
@@ -39,7 +46,7 @@ object Pipeline {
     * Catalyst pushes its IsNotNull conjuncts down through the projection
     * anyway (§4.1). A key group whose first row lacks a required field
     * therefore contributes no row: keep-first picks before the filter. */
-  def transform(raw: DataFrame, spec: PlatformSpec, now: Column = current_timestamp()): DataFrame = {
+  def transform(raw: DataFrame, spec: PlatformSpec, now: Column = RunStamp.current()): DataFrame = {
     // A22 — deterministic keep-first on input order.
     val deduped = spec.dedupKey match {
       case Some(k) =>
@@ -105,7 +112,7 @@ object Pipeline {
   /** Full run over pre-loaded raw frames (extract is the caller's concern —
     * see Tables.csv / Tables.tableIfExists for the tolerant A1/A2 readers). */
   def run(rawByPlatform: Map[String, DataFrame],
-      now: Column = current_timestamp()): DataFrame =
+      now: Column = RunStamp.current()): DataFrame =
     assemble(transformAll(rawByPlatform, now).map(_._2))
 
   /** The reference's run report (`src/etl/datapipeline.py:110-189`): a
@@ -133,7 +140,7 @@ object Pipeline {
     * action — the reference pays a `len(df)` materialization per stage;
     * here the counts add no pass and work identically on a cluster. */
   def runReport(rawByPlatform: Map[String, DataFrame],
-      now: Column = current_timestamp(),
+      now: Column = RunStamp.current(),
       metricsTimeout: scala.concurrent.duration.Duration =
         scala.concurrent.duration.Duration(30, "s"))(
       load: DataFrame => Unit): RunReport = {

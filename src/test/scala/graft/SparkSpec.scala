@@ -15,6 +15,9 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // the engine's codegen cache size (static: the first session in the
+      // JVM sets it)
+      .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
