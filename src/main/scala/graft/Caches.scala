@@ -12,20 +12,12 @@ import org.apache.spark.sql.DataFrame
   * LONG-LIVED session embedding this library should call [[releaseAll]]
   * after consuming each such query's result, or the cached frames
   * accumulate in executor storage memory for the life of the session.
-  * Sibling housekeeping for long-lived sessions — all keyed by corpus dir
-  * with the same immutable-snapshot staleness contract (call after
-  * appending to a dir; never needed for per-SF snapshot dirs):
-  * [[graft.operators.Similarity.refreshCorpusCounts]] (ss08's plane-sizing
-  * count), [[graft.operators.Similarity.refreshCodebooks]] (ss06/ss07's
-  * trained PQ codebook), [[graft.operators.Similarity.refreshIvfCentroids]]
-  * (ss05's coarse quantizer),
-  * [[graft.operators.TextAnalysis.refreshBigramVocabs]] (tx15/tx16's
-  * subword vocab), and
-  * [[graft.operators.Layout.resetRefusedCounters]] (the refusal-metric
-  * registry, which otherwise grows by one Observation per capped-builder
-  * invocation). The fingerprinted store [[graft.sources.Artifacts]]
-  * (table schemas, dd08's Bloom sketch) needs no such call: it rebuilds an
-  * artifact whenever its path's listing fingerprint changes.
+  * Sibling housekeeping: [[graft.operators.Layout.resetRefusedCounters]]
+  * (the refusal-metric registry, which otherwise grows by one Observation
+  * per capped-builder invocation). Per-corpus state (codebooks, centroids,
+  * vocabularies, counts, persisted indexes, format fixtures) lives in
+  * [[graft.sources.Artifacts]], which rebuilds an artifact whenever its
+  * input's listing fingerprint changes, so it needs no call.
   *
   * LOCALCHECKPOINT FRAMES (r19/r20): many builders now pin intermediates
   * with `localCheckpoint(eager = false)` instead of a tracked cache

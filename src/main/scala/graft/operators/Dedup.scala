@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchExprs
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 import graft.sources.Tables.table
 
 /** Deduplication operators for a training-data pipeline, designed for
@@ -411,50 +411,24 @@ object Dedup {
     * ingests — the (band, bucket, doc_id) postings and the per-doc sorted
     * shingle hashes for exact verification — appending each accepted
     * batch; a new batch pays only its own scan plus bucket probes. Here
-    * the index is built ONCE per (process, sfDir) at plan-build time (the
-    * e14/e17 fixture lifecycle: pid-keyed tmpdir, stale-sweep, shutdown
-    * cleanup) and dd11 probes the PERSISTED parquet, so its per-run wall
-    * is probe-sized while its result — and oracle — are unchanged.
+    * the index is built ONCE per corpus snapshot at plan-build time (an
+    * [[Artifacts.onDisk]] artifact of documents.parquet) and dd11 probes
+    * the PERSISTED parquet, so its per-run wall is probe-sized while its
+    * result — and oracle — are unchanged.
     *
     * The index holds the EXISTING CORPUS ONLY (even doc_ids, dd07's
     * deterministic split): since r12 the batch side computes its own
     * signatures from `documents` at query time, so the per-run plan pays
     * the one cost a real ingest always pays — its own scan — and the
     * index contains nothing the production story wouldn't have persisted
-    * (DedupSpec pins the no-batch-rows property).
-    *
-    * Memoized per (dir, content fingerprint of documents.parquet): a
-    * rewritten corpus at the same path (tests reusing a tmp dir) rebuilds
-    * rather than serving stale postings. The map stores a memoizing thunk
-    * and the multi-second Spark write runs when the thunk is FORCED —
-    * outside the CHM bin lock (lazy-val synchronization gives once-only
-    * semantics), so concurrent plan builders on other keys never stall
-    * behind a build. */
-  private val dd11IndexPaths = new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-  private[graft] def dd11IndexPath(s: SparkSession, dir: String): String = {
-    val key = dir + "|" + EtlQueries.contentFingerprint(s"$dir/documents.parquet")
-    dd11IndexPaths.computeIfAbsent(key, { _ =>
-      lazy val built: String = {
-        EtlQueries.sweepStaleFixtures("graft_dd11_index_")
-        val f = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_dd11_index_${ProcessHandle.current().pid()}_${EtlQueries.fixtureKey(key)}")
-        val path = f.getAbsolutePath
-        val d = fuzzySigs(table(s, dir, "documents").filter(col("doc_id") % 2 === 0))
-        bandedBuckets(d).write.mode("overwrite").parquet(s"$path/bands")
-        d.select(col("doc_id"), col("sh"))
-          .write.mode("overwrite").parquet(s"$path/sh")
-        sys.addShutdownHook {
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).foreach(_.foreach(rm))
-            x.delete(): Unit
-          }
-          rm(f)
-        }
-        path
-      }
-      () => built
-    })()
-  }
+    * (DedupSpec pins the no-batch-rows property). */
+  private[graft] def dd11IndexPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/documents.parquet", "dd11-index") { path =>
+      val d = fuzzySigs(table(s, dir, "documents").filter(col("doc_id") % 2 === 0))
+      bandedBuckets(d).write.mode("overwrite").parquet(s"$path/bands")
+      d.select(col("doc_id"), col("sh"))
+        .write.mode("overwrite").parquet(s"$path/sh")
+    }
 
   /** Window length (tokens) of the substring-dedup family (dd12/dd13/dd14
     * and the shared index below). Lee et al. 2021 use 50 BPE tokens; 8
@@ -468,93 +442,73 @@ object Dedup {
     * explode + md5 of every window — the dominant cost, ~3 rebuilds of
     * one index per bench pass); the in-code 100 TB note always said
     * production persists exactly this shape once per corpus snapshot and
-    * lets every consumer probe it. Same fixture lifecycle as
-    * [[dd11IndexPath]]: memo key folds a content fingerprint of
-    * documents.parquet, build runs outside the CHM bin lock, pid-keyed
-    * tmpdir with stale-sweep and shutdown cleanup. The window frame is
+    * lets every consumer probe it. Like [[dd11IndexPath]], an
+    * [[Artifacts.onDisk]] artifact of documents.parquet. The window frame is
     * written h-clustered (repartition on the hash before write) so each
     * file holds a hash range; results of all three queries — and their
     * oracles — are byte-identical to the recompute form. */
-  private val ddWinIndexPaths = new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-  private[graft] def ddWinIndexPath(s: SparkSession, dir: String): String = {
-    val key = dir + "|" + EtlQueries.contentFingerprint(s"$dir/documents.parquet")
-    ddWinIndexPaths.computeIfAbsent(key, { _ =>
-      lazy val built: String = {
-        EtlQueries.sweepStaleFixtures("graft_ddwin_index_")
-        val f = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_ddwin_index_${ProcessHandle.current().pid()}_${EtlQueries.fixtureKey(key)}")
-        val path = f.getAbsolutePath
-        val K = substringK
-        val Wb = org.apache.spark.sql.expressions.Window
-        // fp: md5 of the normalized token SEQUENCE — the sequence-CLASS
-        // key (identical sequences share every substring/containment
-        // relation). rnk orders members within a class (doc_id asc),
-        // csz is the class size; is_rep marks the class representative's
-        // window rows. Computed once at index-build time (one fp
-        // exchange) so dd15's class collapse is a SCAN FILTER at query
-        // time, never a join against the corpus-sized rep set — classes
-        // are length-homogeneous, so a class is either entirely
-        // window-eligible or entirely sub-K, and the build-time rank
-        // equals the rank among eligible members.
-        val t = table(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            expr("regexp_extract_all(lower(text), '[a-z]+', 0)").as("ws"))
-          .withColumn("fp", md5(concat_ws(" ", col("ws")).cast("binary")))
-          .withColumn("rnk", row_number().over(
-            Wb.partitionBy("fp").orderBy("doc_id")))
-          .withColumn("csz", count(lit(1)).over(Wb.partitionBy("fp")))
-        // repartition BEFORE the explode: the K-window md5 expansion is
-        // the dominant per-row compute, and an unsplittable
-        // single-row-group file gives the scan 1-2 partitions,
-        // serializing the whole expansion (measured at soak sf1.0:
-        // 7.8 s single-core vs ~0.9 s across 32)
-        // Physically PARTITIONED by doc_id parity (r12): the incremental
-        // family (dd17/dd18/st08/qp03) reads only the corpus (par=0)
-        // slice, and with `par` as a partition directory that read is
-        // DIRECTORY pruning — the batch half of the index never reaches
-        // those scans (plan-asserted in DedupSpec). Full-corpus
-        // consumers (dd12-dd16) read both directories; h-clustering is
-        // preserved within each.
-        val winsDf = t.filter(size(col("ws")) >= K)
-          .repartition(s.sparkContext.defaultParallelism)
-          .select(col("doc_id"), col("source"), (col("rnk") === 1).as("is_rep"),
-            explode(expr(
-              s"transform(sequence(1, size(ws) - ${K - 1}), i -> " +
-                s"struct(i AS pos, md5(cast(concat_ws(' ', slice(ws, i, $K)) AS binary)) AS h))")).as("pw"))
-          .select(col("doc_id"), col("source"), col("is_rep"),
-            col("pw.pos").as("pos"), col("pw.h").as("h"),
-            (col("doc_id") % 2).as("par"))
-        winsDf.repartition(col("h"))
-          .write.mode("overwrite").partitionBy("par").parquet(s"$path/wins")
-        // A partitionBy write of an EMPTY frame emits only _SUCCESS — no
-        // schema-bearing file — and every consumer's read would then
-        // throw UNABLE_TO_INFER_SCHEMA at plan time (a corpus with no
-        // K-token doc must yield empty results, as the pre-partitioned
-        // form did). Detect THAT case precisely — the just-finished write
-        // left no part file anywhere under wins/ — and write the schema
-        // flat (par rides as a regular column — the par=0 filters still
-        // apply, there is just nothing to prune). r12 probed the read and
-        // treated ANY exception as emptiness, which would have silently
-        // replaced a populated index with an empty one on a transient
-        // read failure (r12 advice); a failure with part files present
-        // now surfaces at the consumer instead of being masked here.
-        if (!hasPartFile(new java.io.File(s"$path/wins")))
-          winsDf.limit(0).write.mode("overwrite").parquet(s"$path/wins")
-        t.select(col("doc_id"), col("source"), size(col("ws")).as("n_ws"),
-          col("fp"), col("rnk"), col("csz"))
-          .write.mode("overwrite").parquet(s"$path/docs")
-        sys.addShutdownHook {
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).foreach(_.foreach(rm))
-            x.delete(): Unit
-          }
-          rm(f)
-        }
-        path
-      }
-      () => built
-    })()
-  }
+  private[graft] def ddWinIndexPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/documents.parquet", "ddwin-index") { path =>
+      val K = substringK
+      val Wb = org.apache.spark.sql.expressions.Window
+      // fp: md5 of the normalized token SEQUENCE — the sequence-CLASS
+      // key (identical sequences share every substring/containment
+      // relation). rnk orders members within a class (doc_id asc),
+      // csz is the class size; is_rep marks the class representative's
+      // window rows. Computed once at index-build time (one fp
+      // exchange) so dd15's class collapse is a SCAN FILTER at query
+      // time, never a join against the corpus-sized rep set — classes
+      // are length-homogeneous, so a class is either entirely
+      // window-eligible or entirely sub-K, and the build-time rank
+      // equals the rank among eligible members.
+      val t = table(s, dir, "documents")
+        .select(col("doc_id"), col("source"),
+          expr("regexp_extract_all(lower(text), '[a-z]+', 0)").as("ws"))
+        .withColumn("fp", md5(concat_ws(" ", col("ws")).cast("binary")))
+        .withColumn("rnk", row_number().over(
+          Wb.partitionBy("fp").orderBy("doc_id")))
+        .withColumn("csz", count(lit(1)).over(Wb.partitionBy("fp")))
+      // repartition BEFORE the explode: the K-window md5 expansion is
+      // the dominant per-row compute, and an unsplittable
+      // single-row-group file gives the scan 1-2 partitions,
+      // serializing the whole expansion (measured at soak sf1.0:
+      // 7.8 s single-core vs ~0.9 s across 32)
+      // Physically PARTITIONED by doc_id parity (r12): the incremental
+      // family (dd17/dd18/st08/qp03) reads only the corpus (par=0)
+      // slice, and with `par` as a partition directory that read is
+      // DIRECTORY pruning — the batch half of the index never reaches
+      // those scans (plan-asserted in DedupSpec). Full-corpus
+      // consumers (dd12-dd16) read both directories; h-clustering is
+      // preserved within each.
+      val winsDf = t.filter(size(col("ws")) >= K)
+        .repartition(s.sparkContext.defaultParallelism)
+        .select(col("doc_id"), col("source"), (col("rnk") === 1).as("is_rep"),
+          explode(expr(
+            s"transform(sequence(1, size(ws) - ${K - 1}), i -> " +
+              s"struct(i AS pos, md5(cast(concat_ws(' ', slice(ws, i, $K)) AS binary)) AS h))")).as("pw"))
+        .select(col("doc_id"), col("source"), col("is_rep"),
+          col("pw.pos").as("pos"), col("pw.h").as("h"),
+          (col("doc_id") % 2).as("par"))
+      winsDf.repartition(col("h"))
+        .write.mode("overwrite").partitionBy("par").parquet(s"$path/wins")
+      // A partitionBy write of an EMPTY frame emits only _SUCCESS — no
+      // schema-bearing file — and every consumer's read would then
+      // throw UNABLE_TO_INFER_SCHEMA at plan time (a corpus with no
+      // K-token doc must yield empty results, as the pre-partitioned
+      // form did). Detect THAT case precisely — the just-finished write
+      // left no part file anywhere under wins/ — and write the schema
+      // flat (par rides as a regular column — the par=0 filters still
+      // apply, there is just nothing to prune). r12 probed the read and
+      // treated ANY exception as emptiness, which would have silently
+      // replaced a populated index with an empty one on a transient
+      // read failure (r12 advice); a failure with part files present
+      // now surfaces at the consumer instead of being masked here.
+      if (!hasPartFile(new java.io.File(s"$path/wins")))
+        winsDf.limit(0).write.mode("overwrite").parquet(s"$path/wins")
+      t.select(col("doc_id"), col("source"), size(col("ws")).as("n_ws"),
+        col("fp"), col("rnk"), col("csz"))
+        .write.mode("overwrite").parquet(s"$path/docs")
+    }
 
   /** Emptiness probe for the just-written window index. The ONLY state
     * that may read as "empty" is a verified absence: the directory does
@@ -1499,7 +1453,7 @@ object Dedup {
   private[graft] def bloomSketch(
       s: SparkSession,
       dir: String): org.apache.spark.broadcast.Broadcast[Array[Byte]] =
-    graft.sources.Artifacts.getOrBuild(s, s"$dir/documents.parquet", "dd08.bloom") {
+    Artifacts.getOrBuild(s, s"$dir/documents.parquet", "dd08.bloom") {
       import org.apache.spark.sql.graftbridge.ColumnBridge.{column => C, expression => E}
       val base = table(s, dir, "documents")
         .select(col("doc_id"), md5(lower(trim(col("text"))).cast("binary")).as("fp"))

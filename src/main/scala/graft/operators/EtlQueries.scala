@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.EtlFunctions._
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 import graft.sources.Tables.table
 
 /** The reference's ETL primitives (SURVEY.md §2 Part A) exercised as declared
@@ -15,209 +15,65 @@ import graft.sources.Tables.table
   * engine. */
 object EtlQueries {
 
-  /** Collision-proof per-sfDir path component for the on-disk fixtures.
-    * An earlier cut used `dir.hashCode.toHexString`, but the memo keys on
-    * the FULL dir string — two sfDirs with colliding Int hashCodes in one
-    * process would overwrite each other's fixture and silently serve the
-    * first dir's memoized path the second dir's rows. A name-UUID (md5 of
-    * the dir bytes) cannot collide in practice. */
-  private[operators] def fixtureKey(dir: String): String =
-    java.util.UUID.nameUUIDFromBytes(
-      dir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
-
-  /** Cheap content fingerprint of a data path (file OR parquet dir):
-    * name/length/mtime of every regular file under it, order-insensitive.
-    * Folding this into an index memo key makes a REWRITTEN input at the
-    * same path rebuild the index instead of serving stale postings (the
-    * r11 advice on dd11's dir-only key) while an untouched snapshot dir
-    * still memoizes. Not a data hash — rewriting a file with identical
-    * length and mtime is indistinguishable, which no filesystem writer
-    * does in practice. */
-  private[graft] def contentFingerprint(path: String): String = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).map(walk).foldLeft(0L)(_ ^ _)
-      else f.getName.hashCode.toLong * 1000003L ^ f.length() * 31L ^ f.lastModified()
-    walk(new java.io.File(path)).toHexString
-  }
-
-  /** Sweep fixture dirs leaked by SIGKILL'd JVMs — the shutdown hooks
-    * below never ran, so without this the tmpdir grows by one fixture per
-    * killed process forever. Same liveness test as q37's warehouse sweep
-    * (`Relational.scala`): a dir whose embedded pid is dead, or whose
-    * process started AFTER the dir was written (recycled pid), belongs to
-    * no live writer. Runs once per prefix per process, on first fixture
-    * build; unparseable names are skipped, never a crash. */
-  private val sweptPrefixes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[operators] def sweepStaleFixtures(prefix: String): Unit =
-    if (sweptPrefixes.add(prefix)) {
-      val pidPat = ("^" + java.util.regex.Pattern.quote(prefix) + "(\\d{1,18})_").r
-      Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.startsWith(prefix))
-        .foreach { d =>
-          pidPat.findFirstMatchIn(d.getName)
-            .flatMap(m => m.group(1).toLongOption)
-            .filter(_ != ProcessHandle.current().pid())
-            .foreach { pid =>
-              val h = ProcessHandle.of(pid)
-              val pidDead = !h.map[java.lang.Boolean](_.isAlive).orElse(false)
-              val recycled = h
-                .flatMap[java.time.Instant](p => p.info().startInstant())
-                .map[java.lang.Boolean](si =>
-                  java.lang.Boolean.valueOf(si.toEpochMilli > d.lastModified()))
-                .orElse(false)
-              if (pidDead || recycled)
-                org.apache.commons.io.FileUtils.deleteQuietly(d)
-            }
-        }
-    }
-
-  /** e14's on-disk CSV fixture, written ONCE per (process, sfDir) — the
-    * builder runs 2-3× per bench round and must not re-write (a side effect
-    * per invocation) or race a concurrent process (per-PID dir). The dir is
-    * removed by a shutdown hook, so repeated processes don't accumulate
-    * tmp garbage. */
-  private val e14Paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def e14CsvPath(s: SparkSession, dir: String): String = {
-    // key folds a content fingerprint of the source table (the dd11-index
-    // discipline, r11 advice): a rewritten input at the same path rebuilds
-    // the fixture instead of round-tripping stale rows
-    val key = dir + "|" + contentFingerprint(s"$dir/supplier.parquet")
-    e14Paths.computeIfAbsent(key, { _ =>
-      sweepStaleFixtures("graft_e14_csv_")
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e14_csv_${ProcessHandle.current().pid()}_${fixtureKey(key)}")
-      val path = f.getAbsolutePath
+  /** e14's on-disk CSV fixture, an [[Artifacts.onDisk]] artifact of the
+    * supplier table: the builder runs 2-3× per bench round and must not
+    * re-write it (a side effect per invocation). */
+  private def e14CsvPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/supplier.parquet", "e14-csv") { path =>
       table(s, dir, "supplier")
         .write.mode("overwrite").option("header", "true").csv(path)
-      sys.addShutdownHook {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm))
-          x.delete(): Unit
-        }
-        rm(f)
-      }
-      path
-    })
-  }
+    }
 
-  /** e16's JSONL fixture — same once-per-(process, sfDir) lifecycle as
-    * e14's CSV (no side effect per builder invocation, per-PID dir,
-    * shutdown-hook cleanup). JSONL is the interchange format LLM
+  /** e16's JSONL fixture. JSONL is the interchange format LLM
     * training-data pipelines actually trade in; the fixture is the
     * documents table serialized line-per-record, and the declared query
     * proves the schema'd read round-trips it bit-exactly (JSON string
     * escaping included) against the parquet oracle. */
-  private val e16Paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def e16JsonlPath(s: SparkSession, dir: String): String = {
-    val key = dir + "|" + contentFingerprint(s"$dir/documents.parquet")
-    e16Paths.computeIfAbsent(key, { _ =>
-      sweepStaleFixtures("graft_e16_jsonl_")
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e16_jsonl_${ProcessHandle.current().pid()}_${fixtureKey(key)}")
-      val path = f.getAbsolutePath
+  private def e16JsonlPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/documents.parquet", "e16-jsonl") { path =>
       table(s, dir, "documents")
         .write.mode("overwrite").json(path)
-      sys.addShutdownHook {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm))
-          x.delete(): Unit
-        }
-        rm(f)
-      }
-      path
-    })
-  }
+    }
 
-  /** e17's lang-partitioned parquet fixture — same once-per-(process,
-    * sfDir) lifecycle as e14/e16. Hive-style `partitionBy("lang")` layout:
-    * the partition column lives in directory names, not data files, which
-    * is the physical shape a 100 TB date/lang-partitioned corpus table
-    * actually has on an object store. */
-  private val e17Paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def e17PartitionedPath(s: SparkSession, dir: String): String = {
-    val key = dir + "|" + contentFingerprint(s"$dir/documents.parquet")
-    e17Paths.computeIfAbsent(key, { _ =>
-      sweepStaleFixtures("graft_e17_part_")
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e17_part_${ProcessHandle.current().pid()}_${fixtureKey(key)}")
-      val path = f.getAbsolutePath
+  /** e17's lang-partitioned parquet fixture. Hive-style
+    * `partitionBy("lang")` layout: the partition column lives in directory
+    * names, not data files, which is the physical shape a 100 TB
+    * date/lang-partitioned corpus table actually has on an object store. */
+  private def e17PartitionedPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/documents.parquet", "e17-partitioned") { path =>
       table(s, dir, "documents")
         .write.mode("overwrite").partitionBy("lang").parquet(path)
-      sys.addShutdownHook {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm))
-          x.delete(): Unit
-        }
-        rm(f)
-      }
-      path
-    })
-  }
+    }
 
-  /** e18's schema-EVOLVED parquet fixture — same once-per-(process, sfDir)
-    * lifecycle as e14/e16/e17. Two generations under one root: gen=0 is
-    * the documents table as first ingested (doc_id, text, lang — even
-    * ids), gen=1 adds the later columns (source, n_chars — odd ids). This
-    * is the physical reality of a long-lived 100 TB corpus: new columns
-    * arrive, old shards are NEVER rewritten, and every reader must
+  /** e18's schema-EVOLVED parquet fixture. Two generations under one
+    * root: gen=0 is the documents table as first ingested (doc_id, text,
+    * lang — even ids), gen=1 adds the later columns (source, n_chars — odd
+    * ids). This is the physical reality of a long-lived 100 TB corpus: new
+    * columns arrive, old shards are NEVER rewritten, and every reader must
     * null-fill history correctly. */
-  private val e18Paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def e18EvolvedPath(s: SparkSession, dir: String): String = {
-    val key = dir + "|" + contentFingerprint(s"$dir/documents.parquet")
-    e18Paths.computeIfAbsent(key, { _ =>
-      sweepStaleFixtures("graft_e18_evolved_")
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e18_evolved_${ProcessHandle.current().pid()}_${fixtureKey(key)}")
-      val path = f.getAbsolutePath
+  private def e18EvolvedPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/documents.parquet", "e18-evolved") { path =>
       val d = table(s, dir, "documents")
       d.filter(col("doc_id") % 2 === 0).select("doc_id", "text", "lang")
         .write.mode("overwrite").parquet(s"$path/gen=0")
       d.filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$path/gen=1")
-      sys.addShutdownHook {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm))
-          x.delete(): Unit
-        }
-        rm(f)
-      }
-      path
-    })
-  }
+    }
 
-  /** e19's ORC fixture — same once-per-(process, sfDir) lifecycle as
-    * e14/e16. ORC is the other columnar format Spark ships natively
-    * (sql/core bundles the reader; no extra connector), and the second
-    * most common lake format after parquet — a complete engine must scan
-    * it with the same declared-schema discipline. The fixture is the
+  /** e19's ORC fixture. ORC is the other columnar format Spark ships
+    * natively (sql/core bundles the reader; no extra connector), and the
+    * second most common lake format after parquet — a complete engine must
+    * scan it with the same declared-schema discipline. The fixture is the
     * documents table rewritten as ORC with a filter-friendly layout
     * (sorted by n_chars within the write so ORC's min/max stripe stats
     * line up with e19's pushed predicate). */
-  private val e19Paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def e19OrcPath(s: SparkSession, dir: String): String = {
-    val key = dir + "|" + contentFingerprint(s"$dir/documents.parquet")
-    e19Paths.computeIfAbsent(key, { _ =>
-      sweepStaleFixtures("graft_e19_orc_")
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_e19_orc_${ProcessHandle.current().pid()}_${fixtureKey(key)}")
-      val path = f.getAbsolutePath
+  private def e19OrcPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/documents.parquet", "e19-orc") { path =>
       table(s, dir, "documents")
         .sortWithinPartitions("n_chars")
         .write.mode("overwrite").orc(path)
-      sys.addShutdownHook {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm))
-          x.delete(): Unit
-        }
-        rm(f)
-      }
-      path
-    })
-  }
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A1 (ORC source) — declared-schema ORC scan with a pushed predicate,
@@ -245,13 +101,15 @@ object EtlQueries {
     // the generations' footers distributed-side (no second data pass) and
     // null-fills the old generation's missing columns; the oracle replays
     // the null-fill rule on the unevolved parquet, so the evolved
-    // write→merge→scan round trip is hash-checked end to end. At 100 TB
-    // the alternative — a DECLARED superset schema on the read (e16's
-    // discipline) — skips even the footer pass; mergeSchema is the
-    // exploratory/first-contact form.
+    // write→merge→scan round trip is hash-checked end to end. The merged
+    // schema is an artifact of the fixture: the footer-merge job runs on
+    // the first call, and later calls read with it declared (e16's
+    // discipline), starting no job.
     "e18_evolved_scan" -> ((s, dir) => {
       val path = e18EvolvedPath(s, dir)
-      s.read.option("mergeSchema", "true").parquet(path)
+      val merged = Artifacts.getOrBuild(s, path, "merged-schema")(
+        s.read.option("mergeSchema", "true").parquet(path).schema)
+      s.read.schema(merged).parquet(path)
         .select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars"))
         .orderBy("doc_id")

@@ -100,9 +100,11 @@ object Layout {
   /** Write a table bucketed+sorted by join keys. Two tables bucketed the
     * same way join with NO exchange (and no sort, since buckets are sorted):
     * the shuffle is paid once at write time and amortized over every later
-    * join — the standard layout for a fact table joined daily at 100 TB. */
-  def writeBucketed(df: DataFrame, table: String, keys: Seq[String], buckets: Int): Unit =
-    df.write
+    * join — the standard layout for a fact table joined daily at 100 TB.
+    * With a `location` the table is external, its files stored there. */
+  def writeBucketed(df: DataFrame, table: String, keys: Seq[String], buckets: Int,
+      location: Option[String] = None): Unit =
+    location.foldLeft(df.write)(_.option("path", _))
       .mode("overwrite")
       .bucketBy(buckets, keys.head, keys.drop(1): _*)
       .sortBy(keys.head, keys.drop(1): _*)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.Artifacts
 import graft.sources.Tables.table
 
 /** Relational operator surface (SURVEY.md §2 Part B): joins (broadcast /
@@ -26,13 +27,12 @@ object Relational {
   /** Exact decimal sum of a (possibly computed) double column → double. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 6))).cast(DoubleType)
 
-  /** q37's bucketed tables, written once per (process, dir) — the layout's
-    * amortize-the-shuffle lifecycle (see the q37 builder comment). */
-  private val q37Tables =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Exact decimal average → double (sum exact, one double division at the end). */
   def davg(c: Column): Column = dsum(c) / count(lit(1))
+
+  /** The catalog name of q37's bucketed table `side` stored under `artifact`. */
+  private def q37Table(artifact: String, side: String): String =
+    s"graft_q37_${side}_" + new java.io.File(artifact).getName.replaceAll("[^A-Za-z0-9]+", "_")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- Aggregation: hash agg with partial+final (Catalyst HashAggregateExec) ---
@@ -472,11 +472,10 @@ object Relational {
     // time and amortized over every later join, the standard layout for a
     // fact table joined daily at 100 TB. The write happens inside the
     // builder because it IS the operator (the declared cost of the layout),
-    // but only ONCE per (process, dir) — that amortization is the
+    // but only ONCE per corpus snapshot — that amortization is the
     // operator's entire point, so repeat invocations (bench pass B, a warm
-    // session) measure the shuffle-free join, not a re-write. Same
-    // staleness contract as the e14 fixture / Similarity.embCounts:
-    // immutable snapshot dirs; LayoutSpec asserts the plan on this query.
+    // session) measure the shuffle-free join, not a re-write. LayoutSpec
+    // asserts the plan on this query.
     // The merge hint pins SMJ so the demonstration is the bucket-aligned
     // sort-merge, not a broadcast that would trivially skip the shuffle
     // anyway; grouping by the JOIN key lets the aggregation reuse the
@@ -485,62 +484,19 @@ object Relational {
     // Oracle = the same join on the unbucketed parquet (bucketing must
     // never change results, only the plan). ---
     "q37_bucketed_join" -> ((s, dir) => {
-      val (ot, lt) = q37Tables.computeIfAbsent(dir, { _ =>
-        // table names carry the SANITIZED dir (collision-free, unlike a
-        // hashCode) and the pid (two concurrent JVMs sharing the warehouse
-        // must never drop/rewrite each other's live tables — the memo only
-        // serializes within one process)
-        val suffix = dir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "") +
-          "_p" + ProcessHandle.current().pid()
-        val (ot, lt) = (s"graft_q37_o_$suffix", s"graft_q37_l_$suffix")
-        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-        // Sweep tables left by DEAD processes: names are pid-suffixed so
-        // live JVMs never collide, but a crashed/finished JVM never drops
-        // its own — without this, the shared warehouse grows by two table
-        // dirs per bench/test process forever. Runs once per (process,
-        // dir) inside the memo; a live foreign pid's tables are untouched.
-        // PID-reuse tiebreak: a recycled pid reads as alive, but a process
-        // that STARTED AFTER the table dir was last written cannot be its
-        // writer — sweep it. A legitimately long-lived owner (started
-        // before it wrote the dir) keeps its tables indefinitely; an
-        // earlier cut swept any >24h dir unconditionally, which would
-        // have dropped a live day-old session's tables mid-run. Suffixes
-        // that don't parse as a pid (e.g. a stray >18-digit dir) are
-        // treated as not-ours and skipped, never a sweep crash.
-        val pidPat = "_p(\\d{1,18})$".r
-        Option(new java.io.File(wh).listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("graft_q37_"))
-          .foreach { d =>
-            pidPat.findFirstMatchIn(d.getName)
-              .flatMap(m => m.group(1).toLongOption)
-              .filter(_ != ProcessHandle.current().pid())
-              .foreach { pid =>
-                val h = ProcessHandle.of(pid)
-                val pidDead = !h.map[java.lang.Boolean](_.isAlive).orElse(false)
-                val recycled = h
-                  .flatMap[java.time.Instant](p =>
-                    p.info().startInstant())
-                  .map[java.lang.Boolean](si =>
-                    java.lang.Boolean.valueOf(si.toEpochMilli > d.lastModified()))
-                  .orElse(false)
-                if (pidDead || recycled)
-                  org.apache.commons.io.FileUtils.deleteQuietly(d)
-              }
-          }
-        Seq(ot, lt).foreach { t =>
-          // the in-memory catalog is per-JVM but the warehouse dir
-          // persists: drop BOTH or a fresh JVM's CREATE sees a stale
-          // non-empty path
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$wh/$t"))
-        }
+      // the tables are external, in an Artifacts.onDisk directory of the
+      // sf dir; their catalog names derive from that directory, which is
+      // unique per (process, input listing, SparkContext)
+      val art = Artifacts.onDisk(s, dir, "q37-bucketed") { path =>
         Layout.writeBucketed(table(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderstatus")), ot, Seq("o_orderkey"), 8)
+          .select(col("o_orderkey"), col("o_orderstatus")),
+          q37Table(path, "o"), Seq("o_orderkey"), 8, Some(s"$path/o"))
         Layout.writeBucketed(table(s, dir, "lineitem")
           .select(col("l_orderkey").as("o_orderkey"),
-            col("l_extendedprice"), col("l_discount")), lt, Seq("o_orderkey"), 8)
-        (ot, lt)
-      })
+            col("l_extendedprice"), col("l_discount")),
+          q37Table(path, "l"), Seq("o_orderkey"), 8, Some(s"$path/l"))
+      }
+      val (ot, lt) = (q37Table(art, "o"), q37Table(art, "l"))
       s.table(ot).filter(col("o_orderstatus") === "F")
         .join(s.table(lt).hint("merge"), "o_orderkey")
         .groupBy("o_orderkey")

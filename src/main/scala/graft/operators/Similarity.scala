@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 import graft.sources.Tables.table
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -39,21 +39,11 @@ object Similarity {
       col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
 
-  /** Corpus size per dir, counted once per process (ss08's plane sizing).
-    *
-    * STALENESS ASSUMPTION: the memo is driver-side state keyed by dir and
-    * never refreshed — correct for the immutable per-SF test dirs and for
-    * the common batch pattern (one job, one snapshot), but a LONG-LIVED
-    * session pointed at a GROWING dir would keep sizing planes for the old
-    * count (plane count moves by 1 only when the corpus roughly doubles, so
-    * drift is gradual, not wrong-result). Call [[refreshCorpusCounts]]
-    * after appending to a corpus dir — alongside [[graft.Caches.releaseAll]]
-    * in a session's between-jobs housekeeping. */
-  private val embCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Drop the memoized corpus counts so the next plan build re-counts
-    * (see the staleness note on `embCounts`). */
-  def refreshCorpusCounts(): Unit = embCounts.clear()
+  /** The corpus size of `dir`, ss08's plane sizing: a count job on the
+    * first call, then an [[Artifacts]] entry of embeddings.parquet. */
+  private def corpusCount(s: SparkSession, dir: String): Long =
+    Artifacts.getOrBuild[java.lang.Long](s, s"$dir/embeddings.parquet", "row-count")(
+      emb(s, dir).count()).longValue
 
   /** ss08's plane count for a corpus of `n` vectors: ceil(log2(n/8))
     * clamped to [8, 24], keeping the EXPECTED uniform bucket ≈ 8 as the
@@ -730,47 +720,27 @@ object Similarity {
   }
 
   /** The persisted corpus kNN GRAPH probed by qp08 — ss23's
-    * iterated-NN-Descent top-kOut edge set, written once per (dir,
-    * embeddings content fingerprint) and read by every downstream graph
-    * consumer. Production builds a corpus ANN graph as an ARTIFACT of
-    * the corpus snapshot (NN-Descent's whole point is amortizing it),
-    * exactly as the substring/banded-LSH families persist their indexes
-    * ([[graft.operators.Dedup]]'s `ddWinIndexPath`/`dd11IndexPath` —
-    * same fixture lifecycle: content-fingerprinted memo key, build
-    * outside the CHM bin lock, pid-keyed tmpdir with stale sweep and
-    * shutdown cleanup). The artifact is byte-identical to the recompute
-    * form, so qp08's oracle deliberately re-derives the full chain. */
-  private val knnGraphArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, () => String]()
+    * iterated-NN-Descent top-kOut edge set, written once per corpus
+    * snapshot and read by every downstream graph consumer. Production
+    * builds a corpus ANN graph as an ARTIFACT of the corpus snapshot
+    * (NN-Descent's whole point is amortizing it), exactly as the
+    * substring/banded-LSH families persist their indexes
+    * ([[graft.operators.Dedup]]'s `ddWinIndexPath`/`dd11IndexPath`): an
+    * [[Artifacts.onDisk]] artifact of embeddings.parquet. The artifact is
+    * byte-identical to the recompute form, so qp08's oracle deliberately
+    * re-derives the full chain. */
   private[graft] def knnGraphArtifactPath(s: SparkSession, dir: String,
       kWork: Int = 8, kOut: Int = 4, bucketW: Int = 16,
-      rounds: Int = 2, systems: Int = 4): String = {
-    // the build PARAMETERS are part of the memo key (r17 advice; r18
+      rounds: Int = 2, systems: Int = 4): String =
+    // the build PARAMETERS are part of the artifact name (r17 advice; r18
     // advice added `systems` when the seed-diversity axis landed): two
     // callers requesting different graph shapes over one corpus snapshot
     // must get two artifacts, never silently share the first one built
-    val key = dir + "|" + EtlQueries.contentFingerprint(s"$dir/embeddings.parquet") +
-      s"|k$kWork-$kOut-w$bucketW-r$rounds-s$systems"
-    knnGraphArtifacts.computeIfAbsent(key, { _ =>
-      lazy val built: String = {
-        EtlQueries.sweepStaleFixtures("graft_knngraph_")
-        val f = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_knngraph_${ProcessHandle.current().pid()}_${EtlQueries.fixtureKey(key)}")
-        val path = f.getAbsolutePath
-        nnDescentIterEdges(emb(s, dir), kWork, kOut, bucketW, rounds, systems)
-          .write.mode("overwrite").parquet(path)
-        sys.addShutdownHook {
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).foreach(_.foreach(rm))
-            x.delete(): Unit
-          }
-          rm(f)
-        }
-        path
-      }
-      () => built
-    })()
-  }
+    Artifacts.onDisk(s, s"$dir/embeddings.parquet",
+        s"knngraph-k$kWork-$kOut-w$bucketW-r$rounds-s$systems") { path =>
+      nnDescentIterEdges(emb(s, dir), kWork, kOut, bucketW, rounds, systems)
+        .write.mode("overwrite").parquet(path)
+    }
 
   /** qp08's body: the per-vector dedup verdict over ss23's linear kNN
     * graph `edges` (vec_id, neighbor_id, rk, dist) — see the
@@ -1018,8 +988,8 @@ object Similarity {
       // sf0.5 soak measured pair generation going superlinear (3.5x wall
       // at 5x rows) exactly because 8 planes was sized for the sf0.1
       // corpus. The count() IS a Spark job (parquet row-group scan), so it
-      // is memoized per (process, dir) — bench/verify re-invoke builders.
-      val n: Long = embCounts.computeIfAbsent(dir, d => Long.box(emb(s, d).count()))
+      // is memoized ([[corpusCount]]) — bench/verify re-invoke builders.
+      val n = corpusCount(s, dir)
       // cap = 8x the expected uniform bucket: clustered corpora skew
       // occupancy, and a hot bucket is refused rather than joined k²
       lshBlockedPairs(s, dir, tables = 2, planes = neardupPlanes(n),
@@ -1084,7 +1054,7 @@ object Similarity {
     // pair — SimilaritySpec pins the overlap on the gate corpus.
     // Rows-only-det (xxhash64-seeded planes have no DuckDB mirror).
     "ss11_lsh_semantic_dedup" -> ((s, dir) => {
-      val n: Long = embCounts.computeIfAbsent(dir, d => Long.box(emb(s, d).count()))
+      val n = corpusCount(s, dir)
       val dropped = lshBlockedPairs(s, dir, tables = 2, planes = neardupPlanes(n),
           bucketCap = defaultNeardupBucketCap)
         .filter(dot("v_a", "v_b") / (col("n_a") * col("n_b")) > 0.3)
@@ -1434,7 +1404,7 @@ object Similarity {
     // key set — nothing quadratic anywhere, the manifest you'd actually
     // run over a 100 TB embedding corpus.
     // The graph is a PERSISTED ARTIFACT of the corpus snapshot
-    // ([[knnGraphArtifactPath]] — the dd11/ddWin fixture lifecycle):
+    // ([[knnGraphArtifactPath]], like the dd11/ddWin indexes):
     // production amortizes the NN-Descent build across every consumer,
     // and this query pays what a real manifest run pays — the edge-set
     // probe, not the build. Byte-identical to the recompute form; the
@@ -1612,47 +1582,6 @@ object Similarity {
       .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
   }
 
-  /** Trained PQ codebooks per corpus dir, memoized per process: M×K = 128
-    * centroids of Ds = 8 doubles — broadcast-sized state whose training
-    * (two multi-job Lloyd iterations) ss06 and ss07 would otherwise each
-    * repeat per invocation, the two slowest entries in the r5 bench.
-    * Production trains a codebook once and serves with it; the memo is that
-    * lifecycle in-process.
-    *
-    * STALENESS ASSUMPTION: same contract as [[embCounts]] — keyed by dir,
-    * never refreshed; correct for immutable snapshot dirs (the batch norm).
-    * A corpus APPENDED to under a live session keeps encoding with the old
-    * codebook — still a valid codebook (recall drifts only as the data
-    * distribution does; PQ serving works this way in production), never a
-    * wrong result. Call [[refreshCodebooks]] after appending, alongside
-    * [[refreshCorpusCounts]] in between-jobs housekeeping. */
-  private val pqCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Int, Array[Double])]]()
-
-  /** Drop memoized PQ codebooks so the next PQ plan retrains (see the
-    * staleness note on `pqCodebooks`). */
-  def refreshCodebooks(): Unit = pqCodebooks.clear()
-
-  /** ss05's coarse IVF centroids per corpus dir, memoized per process: one
-    * tiny row per label (~10 cells × 64 doubles) — the IVF INDEX state. An
-    * IVF deployment builds its coarse quantizer once and serves with it;
-    * recomputing the full-corpus centroid aggregation on every query
-    * invocation was paying a corpus scan for already-known broadcast state.
-    * Same staleness contract as [[embCounts]]/[[pqCodebooks]]; refresh via
-    * [[refreshIvfCentroids]]. Centroid components go through the
-    * Decimal(28,6) sum (not avg): bitwise-reproducible regardless of
-    * partial-agg order, which is what keeps ss05 DuckDB-oracle-checkable —
-    * and makes the memoized values identical to a fresh recompute. */
-  private val ivfCentroids =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Double])]]()
-
-  /** Drop memoized IVF centroids so the next plan re-derives them (see the
-    * staleness note on `ivfCentroids`). */
-  def refreshIvfCentroids(): Unit = ivfCentroids.clear()
-
-  /** The memoized IVF cell centroids as a (tiny, local) DataFrame. The
-    * collect() materializes broadcast-sized index state, like
-    * [[trainCodebook]]'s. */
   /** SQ8 dequantization: per-dim [min, max] grid over the corpus at `dir`
     * (one distributed agg collapsed to a single broadcast row), then each
     * input row's `v` column gains `rv` — the reconstructed bin-midpoint
@@ -1680,8 +1609,19 @@ object Similarity {
       .drop("mns", "mxs")
   }
 
+  /** ss05's coarse IVF centroids per corpus, an [[Artifacts]] entry of
+    * embeddings.parquet: one tiny row per label (~10 cells × 64 doubles) —
+    * the IVF INDEX state. An IVF deployment builds its coarse quantizer
+    * once and serves with it; recomputing the full-corpus centroid
+    * aggregation on every query invocation was paying a corpus scan for
+    * already-known broadcast state. Centroid components go through the
+    * Decimal(28,6) sum (not avg): bitwise-reproducible regardless of
+    * partial-agg order, which is what keeps ss05 DuckDB-oracle-checkable —
+    * and makes the memoized values identical to a fresh recompute. Served
+    * as a (tiny, local) DataFrame; the collect() materializes
+    * broadcast-sized index state, like [[trainCodebook]]'s. */
   private def ivfCells(s: SparkSession, dir: String): DataFrame = {
-    val rows = ivfCentroids.computeIfAbsent(dir, _ =>
+    val rows = Artifacts.getOrBuild(s, s"$dir/embeddings.parquet", "ivf-centroids")(
       table(s, dir, "embeddings")
         .select(col("label"),
           posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")).as(Seq("dim", "x")))
@@ -1724,9 +1664,16 @@ object Similarity {
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
   }
 
-  /** The memoized codebook as a (tiny, local) DataFrame. */
+  /** The trained PQ codebook of a corpus as a (tiny, local) DataFrame,
+    * an [[Artifacts]] entry of embeddings.parquet: M×K = 128 centroids of
+    * Ds = 8 doubles — broadcast-sized state whose training (two multi-job
+    * Lloyd iterations) ss06 and ss07 would otherwise each repeat per
+    * invocation, the two slowest entries in the r5 bench. Production
+    * trains a codebook once and serves with it; the memo is that
+    * lifecycle in-process. */
   private def trainedCodebook(s: SparkSession, dir: String): DataFrame = {
-    val rows = pqCodebooks.computeIfAbsent(dir, _ => trainCodebook(s, dir))
+    val rows = Artifacts.getOrBuild(s, s"$dir/embeddings.parquet", "pq-codebook")(
+      trainCodebook(s, dir))
     import s.implicits._
     rows.toSeq.toDF("m", "code", "center")
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 import graft.sources.Tables.table
 
 /** Text-analysis operators for a training-data pipeline: language ID
@@ -987,7 +987,7 @@ object TextAnalysis {
     // a nightly batch sums two vocabulary-sized sidecars and re-tops the
     // 1024 — tokenizer training cost is O(sidecar), not O(corpus).
     "tx36_refreshed_vocab_tokens" -> ((s, dir) => {
-      val vocab = refreshedVocab(s, dir)
+      val vocab = sidecarVocab(s, dir)
       table(s, dir, "documents")
         .select(col("doc_id"),
           graft.functions.SubwordTokenizer.greedyTokenCount(col("text"), vocab)
@@ -1585,22 +1585,6 @@ object TextAnalysis {
       // runs above it (a cheap post-read filter on 2 columns).
       .transform(graft.Ckpt.lazyCheckpoint(_, "dsir.features"))
 
-  /** tx15/tx16's bigram-merge vocabulary: the corpus's 1024 most frequent
-    * within-word character bigrams, ties broken lexicographically (the
-    * determinism the oracle replays). Built by ONE distributed aggregate
-    * + TakeOrdered (the collect materializes ≤1024 two-char strings —
-    * broadcast-sized index state, the PQ-codebook lifecycle), memoized
-    * per (applicationId, dir) with the same immutable-snapshot staleness
-    * contract as the other per-dir memos; call [[refreshBigramVocabs]]
-    * after appending to a dir (quality drift only — a stale vocab still
-    * tokenizes deterministically, unlike dd08's correctness-relevant
-    * sketch). */
-  private val bigramVocabs =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  /** Drop memoized tx15/tx16 vocabularies so the next plan rebuilds. */
-  def refreshBigramVocabs(): Unit = bigramVocabs.clear()
-
   val vocabSize = 1024
 
   /** Within-word character-bigram counts over a documents slice — the
@@ -1616,34 +1600,24 @@ object TextAnalysis {
         "transform(sequence(1, length(w)-1), i -> substring(w, i, 2))")).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c"))
 
-  private val vocabArtifactPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The persisted tokenizer artifact for `dir`'s corpus slice (even
     * doc_ids) — the dd12-family lifecycle applied to the tokenizer:
     * `counts/` holds the slice's COMPLETE bigram-count sidecar (the
     * additive sufficient statistics a refresh needs — vocabulary-sized,
-    * bounded by charset², never corpus-sized). Built on demand, memoized
-    * per (dir, content fingerprint) with the dd12 staleness contract. */
-  private[graft] def vocabArtifactPath(s: SparkSession, dir: String): String = {
-    val key = dir + "|" + EtlQueries.contentFingerprint(s"$dir/documents.parquet")
-    vocabArtifactPaths.computeIfAbsent(key, { _ =>
-      EtlQueries.sweepStaleFixtures("graft_vocab_artifact_")
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_vocab_artifact_${ProcessHandle.current().pid()}_${EtlQueries.fixtureKey(key)}")
-      val path = f.getAbsolutePath
+    * bounded by charset², never corpus-sized). Built on demand, an
+    * [[Artifacts.onDisk]] artifact of documents.parquet. */
+  private[graft] def vocabArtifactPath(s: SparkSession, dir: String): String =
+    Artifacts.onDisk(s, s"$dir/documents.parquet", "vocab-counts") { path =>
       bigramCounts(table(s, dir, "documents").filter(col("doc_id") % 2 === 0))
         .write.mode("overwrite").parquet(s"$path/counts")
-      path
-    })
-  }
+    }
 
   /** tx36's refreshed vocabulary: the persisted corpus-slice count
     * sidecar summed with the batch's fresh counts, re-topped to
     * [[vocabSize]] under the same (count DESC, bigram ASC) tie-break.
     * Equal to [[bigramVocab]] over the union BY ALGEBRA (counts add);
     * TextAnalysisSpec asserts the sequence equality. */
-  private[graft] def refreshedVocab(s: SparkSession, dir: String): Seq[String] = {
+  private[graft] def sidecarVocab(s: SparkSession, dir: String): Seq[String] = {
     val art = vocabArtifactPath(s, dir)
     Tables.parquet(s, s"$art/counts")
       .unionByName(bigramCounts(
@@ -1653,8 +1627,14 @@ object TextAnalysis {
       .select("g").collect().map(_.getString(0)).toSeq
   }
 
+  /** tx15/tx16's bigram-merge vocabulary: the corpus's 1024 most frequent
+    * within-word character bigrams, ties broken lexicographically (the
+    * determinism the oracle replays). Built by ONE distributed aggregate
+    * + TakeOrdered (the collect materializes ≤1024 two-char strings —
+    * broadcast-sized index state, the PQ-codebook lifecycle), an
+    * [[Artifacts]] entry of documents.parquet. */
   private[graft] def bigramVocab(s: SparkSession, dir: String): Seq[String] =
-    bigramVocabs.computeIfAbsent(s.sparkContext.applicationId + " " + dir, { _ =>
+    Artifacts.getOrBuild(s, s"$dir/documents.parquet", "bigram-vocab") {
       table(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         // length<2 words yield no bigram; the filter also dodges Spark's
@@ -1666,7 +1646,7 @@ object TextAnalysis {
         .orderBy(col("c").desc, col("g").asc)
         .limit(vocabSize)
         .select("g").collect().map(_.getString(0)).toSeq
-    })
+    }
 
   /** tx17's iterated-merge vocabulary: [[bigramVocab]]'s 1024 bigrams
     * plus `mergeRounds` further BPE rounds of `mergeTopK` merges each.
@@ -1676,14 +1656,7 @@ object TextAnalysis {
     * against the ≤2k-entry broadcast side), and admits the top-K by
     * (count DESC, string ASC) — fully deterministic, so the oracle can
     * rebuild it. Each round is one distributed agg + TakeOrdered + a
-    * ≤K-string collect; same memo/staleness contract as [[bigramVocab]]
-    * ([[refreshMergedVocabs]] after appending to a dir). */
-  private val mergedVocabs =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  /** Drop memoized tx17 vocabularies so the next plan rebuilds. */
-  def refreshMergedVocabs(): Unit = mergedVocabs.clear()
-
+    * ≤K-string collect; an [[Artifacts]] entry like [[bigramVocab]]. */
   /** Extra merge rounds on top of the bigram round; round r mints tokens
     * up to 2^(r+1) chars, so 2 rounds prove the variable-length mechanism
     * with up-to-8-char entries. */
@@ -1691,7 +1664,7 @@ object TextAnalysis {
   val mergeTopK = 512
 
   private def mergedVocab(s: SparkSession, dir: String): Seq[String] =
-    mergedVocabs.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, { _ =>
+    Artifacts.getOrBuild(s, s"$dir/documents.parquet", "merged-vocab") {
       val wf = table(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 2)
@@ -1713,7 +1686,7 @@ object TextAnalysis {
         vocab = vocab ++ add
       }
       vocab
-    })
+    }
 
   /** One length-descending greedy probe as a SQL CASE: the longest vocab
     * entry (≤ `maxL`) matching at `pos` wins, 1 char on a miss — the

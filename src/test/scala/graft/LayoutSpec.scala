@@ -100,15 +100,15 @@ class LayoutSpec extends SparkSpec {
   test("q37 writes its bucketed tables once per (process, dir)") {
     val q = graft.SparkEntry.queries("q37_bucketed_join")
     q(spark, sf001).count() // ensures the pair exists (earlier test already did)
-    val wh = new java.io.File("/tmp/graft-warehouse")
-    // restrict to THIS process's tables (the warehouse is shared across
-    // JVMs) and guard against an empty dir from a crashed foreign write —
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    // restrict to THIS process's artifact dirs (the tmpdir is shared across
+    // JVMs); each holds the two tables' dirs, and an empty one is skipped —
     // .max on an empty array would fail the test spuriously
-    def stamps() = wh.listFiles()
-      .filter(_.getName.startsWith("graft_q37_"))
-      .filter(_.getName.endsWith("_p" + ProcessHandle.current().pid()))
+    def stamps() = tmp.listFiles()
+      .filter(_.getName.startsWith(s"graft_q37-bucketed_${ProcessHandle.current().pid()}_"))
+      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
       .filter(d => Option(d.listFiles()).exists(_.nonEmpty))
-      .map(d => d.getName -> d.listFiles().map(_.lastModified).max).toMap
+      .map(d => d.getPath -> d.listFiles().map(_.lastModified).max).toMap
     val before = stamps()
     assert(before.nonEmpty)
     q(spark, sf001).count()

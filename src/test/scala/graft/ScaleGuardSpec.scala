@@ -109,9 +109,6 @@ class ScaleGuardSpec extends SparkSpec {
       val c2 = candidates(d2, n2)
       assert(c1 > 0, "LSH blocker found no candidates — clusters should collide")
       assert(c2 <= 3.0 * c1, s"ss08 candidates grew superlinearly: $c1 -> $c2 at 2x rows")
-    } finally {
-      cleanup()
-      Similarity.refreshCorpusCounts() // housekeeping hook; dirs are throwaway
-    }
+    } finally cleanup()
   }
 }

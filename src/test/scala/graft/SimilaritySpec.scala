@@ -122,32 +122,6 @@ class SimilaritySpec extends SparkSpec {
     assert(mean >= 0.35, f"ivf+sq8 recall $mean%.2f below 0.35")
   }
 
-  test("pq codebook memo: repeat invocations and a refresh are result-invariant") {
-    // the memo must be a pure lifecycle optimization: a memoized codebook
-    // (2nd call) and a freshly retrained one (after the staleness hook)
-    // must produce bit-identical rankings — training is deterministic, so
-    // any divergence means the memo captured the wrong state.
-    val q = Similarity.queries("ss06_pq_ann")
-    val r1 = q(spark, sf001).collect().toSeq
-    val r2 = q(spark, sf001).collect().toSeq
-    Similarity.refreshCodebooks()
-    val r3 = q(spark, sf001).collect().toSeq
-    assert(r1 == r2, "memoized codebook changed the result")
-    assert(r2 == r3, "retraining after refreshCodebooks() changed the result")
-  }
-
-  test("ivf centroid memo: repeat invocations and a refresh are result-invariant") {
-    val q = Similarity.queries("ss05_ivf_ann")
-    def run() = { spark.catalog.clearCache(); Caches.releaseAll()
-      val r = q(spark, sf001).collect().toSeq; Caches.releaseAll(); r }
-    val r1 = run()
-    val r2 = run()
-    Similarity.refreshIvfCentroids()
-    val r3 = run()
-    assert(r1 == r2, "memoized centroids changed the result")
-    assert(r2 == r3, "re-deriving after refreshIvfCentroids() changed the result")
-  }
-
   test("lsh-blocked near-dup (ss08): exact subset of all-pairs, bounded candidates") {
     import org.apache.spark.sql.functions._
     val e = graft.sources.Tables.table(spark, sf001, "embeddings")

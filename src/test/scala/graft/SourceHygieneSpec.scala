@@ -28,10 +28,12 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"control characters in sources:\n${bad.mkString("\n")}")
   }
 
-  /** `file:line: text` of each engine-package source line containing any of `tokens`. */
-  private def engineLinesWith(tokens: String*): Seq[String] = {
-    val pkgs = Seq("operators", "streaming", "multimodal", "etl", "functions")
-      .map(p => Paths.get("src/main/scala/graft", p))
+  private val enginePackages = Seq("operators", "streaming", "multimodal", "etl", "functions")
+
+  /** `file:line: text` of each source line in `packages` containing any of `tokens`. */
+  private def engineLinesWith(tokens: Seq[String],
+      packages: Seq[String] = enginePackages): Seq[String] = {
+    val pkgs = packages.map(p => Paths.get("src/main/scala/graft", p))
     pkgs.foreach(p => assert(Files.isDirectory(p), s"expected to run from the repo root, no $p here"))
     pkgs.flatMap(p => Files.walk(p).iterator().asScala.toList)
       .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
@@ -46,7 +48,7 @@ class SourceHygieneSpec extends AnyFunSuite {
     // Tables.parquet reads with the schema memoized by the path's listing
     // fingerprint; a direct read.parquet infers it with an eager Spark job
     // in every builder call.
-    val bad = engineLinesWith(".read.parquet(")
+    val bad = engineLinesWith(Seq(".read.parquet("))
     assert(bad.isEmpty, s"direct parquet reads (use Tables.parquet):\n${bad.mkString("\n")}")
   }
 
@@ -55,7 +57,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     // date literal is written into the generated Java source, so every call
     // compiles new classes. Carry a per-call value by reference, as
     // graft.functions.RunStamp does.
-    val bad = engineLinesWith("current_timestamp(", "current_date(", "now()")
+    val bad = engineLinesWith(Seq("current_timestamp(", "current_date(", "now()"))
     assert(bad.isEmpty, s"per-query clock values (use RunStamp):\n${bad.mkString("\n")}")
+  }
+
+  test("operators keep per-corpus state only in Artifacts") {
+    // graft.sources.Artifacts is the one store of state derived from a
+    // corpus: fingerprinted, built once, swept and removed at shutdown.
+    val bad = engineLinesWith(Seq("ConcurrentHashMap", "addShutdownHook", "contentFingerprint"),
+      Seq("operators"))
+    assert(bad.isEmpty, s"per-corpus state outside Artifacts:\n${bad.mkString("\n")}")
   }
 }

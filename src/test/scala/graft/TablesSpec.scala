@@ -153,6 +153,80 @@ class TablesSpec extends SparkSpec {
     assert(ok == "built" && builds.get == 2, "the success was not memoized")
   }
 
+  test("two threads missing one key run the build once") {
+    val dir = tmpDir("artifacts-once")
+    Seq(1L).toDF("id").write.parquet(s"$dir/t.parquet")
+    val fp = Artifacts.fingerprint(spark, s"$dir/t.parquet").get
+    val builds = new AtomicInteger()
+    val building = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val results = new ConcurrentHashMap[String, String]()
+    def lookup(who: String): Thread = {
+      val t = new Thread(() => results.put(who, Artifacts.getOrBuild(fp, "once") {
+        builds.incrementAndGet()
+        building.countDown()
+        assert(release.await(60, TimeUnit.SECONDS))
+        "built"
+      }))
+      t.start()
+      t
+    }
+    val first = lookup("first")
+    assert(building.await(60, TimeUnit.SECONDS), "the first build never started")
+    val second = lookup("second")
+    // the second lookup parks: on the in-flight build, or in a second build
+    val parked = Set(Thread.State.BLOCKED, Thread.State.WAITING, Thread.State.TIMED_WAITING)
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!parked(second.getState) && System.nanoTime() < deadline) Thread.sleep(5)
+    release.countDown()
+    first.join(60000)
+    second.join(60000)
+    assert(results.get("first") == "built" && results.get("second") == "built")
+    assert(builds.get == 1, s"${builds.get} builds of one (path, name, fingerprint)")
+  }
+
+  test("an artifact's first build sweeps its dead-pid dirs and keeps live ones") {
+    val tmp = sys.props("java.io.tmpdir")
+    // above Linux's largest pid_max (2^22), so no process has it
+    val dead = new java.io.File(tmp, "graft_sweep-probe_999999999_leftover")
+    val livePid = ProcessHandle.current().parent().orElseThrow().pid()
+    val live = new java.io.File(tmp, s"graft_sweep-probe_${livePid}_leftover")
+    Seq(dead, live).foreach(_.mkdirs())
+    try {
+      val dir = tmpDir("artifacts-sweep")
+      Seq(1L).toDF("id").write.parquet(s"$dir/t.parquet")
+      val path = Artifacts.onDisk(spark, s"$dir/t.parquet", "sweep-probe") { p =>
+        Seq(2L).toDF("id").write.parquet(p)
+      }
+      assert(!dead.exists(), "a dead pid's dir was kept")
+      assert(live.exists(), "a live pid's dir was swept")
+      assert(Tables.parquet(spark, path).as[Long].collect().toSeq == Seq(2L))
+    } finally Seq(dead, live).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  test("two kNN-graph parameter sets over one corpus give two artifacts") {
+    val k4 = graft.operators.Similarity.knnGraphArtifactPath(spark, sf001)
+    val k3 = graft.operators.Similarity.knnGraphArtifactPath(spark, sf001, kOut = 3)
+    assert(k4 != k3)
+    assert(graft.operators.Similarity.knnGraphArtifactPath(spark, sf001) == k4)
+    def maxRank(p: String) = Tables.parquet(spark, p).agg(max("rk")).as[Int].head()
+    assert(maxRank(k4) == 4 && maxRank(k3) == 3)
+  }
+
+  test("a repeat e18 builder call starts no job") {
+    val q = SparkEntry.queries("e18_evolved_scan")
+    q(spark, sf001)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { df = q(spark, sf001) } == 0)
+    // the merged schema null-fills the first generation's missing columns
+    val filled = df.groupBy(col("doc_id") % 2 === 1)
+      .agg(count(col("source")), count(col("n_chars")), count(lit(1)))
+      .as[(Boolean, Long, Long, Long)].collect()
+      .map { case (odd, source, nChars, n) => odd -> ((source, nChars, n)) }.toMap
+    assert(filled(false)._1 == 0 && filled(false)._2 == 0, s"even ids carry gen=1 columns: $filled")
+    assert(filled(true)._1 == filled(true)._3 && filled(true)._2 == filled(true)._3)
+  }
+
   test("tableIfExists: a missing path gives None, a truncated file raises") {
     val dir = tmpDir("tables-ifexists")
     assert(Tables.tableIfExists(spark, s"$dir/absent.parquet").isEmpty)
