@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
   * postings, ss05's cell assignment). The cache must outlive the builder —
   * the action runs on the returned plan — so the builder cannot unpersist
   * it. In the driver mains this is handled process-wide
-  * (`spark.catalog.clearCache()` between queries in Verify/Bench); a
+  * (`spark.catalog.clearCache()` between queries in Verify/Profile); a
   * LONG-LIVED session embedding this library should call [[releaseAll]]
   * after consuming each such query's result, or the cached frames
   * accumulate in executor storage memory for the life of the session.

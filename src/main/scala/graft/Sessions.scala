@@ -2,28 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan auditor: prints the formatted physical plan of selected queries so
-  * scan pruning (PushedFilters / ReadSchema), join strategies (broadcast vs
-  * shuffle), and whole-stage codegen spans can be reviewed.
-  * Usage: runMain graft.Explain <sfDir> [queryName ...] */
-object Explain {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = args.drop(1).toSet
-    val spark = Sessions.build("graft-explain")
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"ERROR: ${e.getMessage}") }
-      }
-    spark.stop()
-  }
-}
-
-/** One place for the engine's session defaults (Verify/Bench/Explain). */
+/** One place for the engine's session defaults (Verify, Profile, Demo). */
 object Sessions {
   /** `spark.sql.codegen.cache.maxEntries`: the generated classes one JVM
     * keeps compiled. Spark's default is 100, and the cache is LRU, so a
@@ -37,6 +16,12 @@ object Sessions {
     * ≈8 KB per class: metaspace after a full GC at the end of the pass,
     * 10,000 entries against 100. */
   val CodegenCacheEntries: Int = 4000
+
+  /** Read parquet TIMESTAMP(NANOS) as long, which [[graft.sources.Tables.events]]
+    * needs. Set for the whole session at its start: the conf is part of
+    * every `Artifacts` fingerprint, so flipping it at the first events read
+    * would build every schema and index built before that read again. */
+  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   def build(app: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -55,17 +40,18 @@ object Sessions {
       // for a little more CPU. Measured r20 on the wide-shuffle family at
       // sf0.1/local[32]: 58.8/58.5 s (lz4, two runs) -> 54.4 s (zstd)
       // over the 12-query subset, 10/12 queries faster, and fewer shuffle
-      // bytes on disk is also the §5 memory-pressure defense the r19
-      // verdict asked for. Not a local-only trade: the ratio advantage
-      // grows with scale (shuffle bytes cross the NIC once, §1.3).
+      // bytes on disk is also a §5 memory-pressure defense. Not a
+      // local-only trade: the ratio advantage grows with scale (shuffle
+      // bytes cross the NIC once, §1.3).
       .config("spark.io.compression.codec", "zstd")
       .config("spark.sql.session.timeZone", "UTC")
       // q37's bucketed tables go through saveAsTable; without this the
       // default warehouse is ./spark-warehouse under the process cwd
-      // (i.e. inside the repo checkout when the driver runs the mains)
+      // (i.e. inside the repo checkout when a main runs from there)
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config(NanosAsLong, "true")
       .getOrCreate()
   }
 }

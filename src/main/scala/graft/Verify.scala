@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,12 +9,13 @@ object Verify {
     val spark = Sessions.build("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val profile = QueryProfile.attach(spark)
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try profile.span(name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -25,16 +24,18 @@ object Verify {
       // over the 80+ query run. The pending count is printed BEFORE the
       // release so a builder-cache leak is visible in the round artifacts
       // (a query that registers caches shows its own count; a LEAK is a
-      // nonzero count on a query that doesn't). codegen_compiles counts the
-      // generated classes the query compiled (codegen cache misses), so a
-      // query that recompiles on every call shows up too.
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+      // nonzero count on a query that doesn't). jobs and stages are the
+      // query's own, builder and write together; codegen_compiles counts the
+      // generated classes it compiled (codegen cache misses), so a query that
+      // recompiles on every call shows up too.
+      val counts = profile.counts(name)
       val refused = operators.Layout.refusedRows
       val refusedNote =
         if (refused.isEmpty) ""
         else refused.map { case (t, n) => s"$t=$n" }.mkString(" cap_refused{", ",", "}")
       System.err.println(
-        s"[verify] $name caches_pending=${Caches.pending} codegen_compiles=$compiles$refusedNote")
+        s"[verify] $name caches_pending=${Caches.pending} jobs=${counts.jobs} " +
+          s"stages=${counts.stages} codegen_compiles=${counts.compiles}$refusedNote")
       operators.Layout.resetRefusedCounters()
       spark.catalog.clearCache()
       Caches.releaseAll()
@@ -54,6 +55,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    profile.close()
     spark.stop()
   }
 }

@@ -25,12 +25,6 @@ import graft.sources.Tables.table
   */
 object Dedup {
 
-  /** Diagnostic only (soak tooling reads it; NOT part of the operator
-    * contract): rounds the most recent CC call on this JVM ran —
-    * including a call that threw its non-convergence error, where it
-    * reads maxIter. */
-  private[graft] val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Distinct word-3-gram shingles of a text column (by column name). */
   def shingles(textCol: String): Column = SketchExprs.wordShingles(col(textCol), 3)
 
@@ -124,7 +118,8 @@ object Dedup {
     * every observed dup graph is diameter-tiny; dd09 is what to run if
     * this bound ever fires in production.
     *
-    * Both input caches are measured load-bearing (r7, ProfileQ CLEAR=1):
+    * Both input caches are measured load-bearing (r7, caches dropped
+    * between reps):
     * `undirected` because every CC iteration re-reads it (reuse across
     * LATER actions, which an exchange cannot serve), and `edges` because
     * its swap branch re-runs the edge pipeline's post-exchange join+filter
@@ -147,7 +142,7 @@ object Dedup {
     *
     * SMALL-SCALE COST, ATTRIBUTED (r8 verdict ask #4 — the judge's quiet
     * rerun read r8's checkpoint form ~0.5 s over r7's cache+count at
-    * sf0.1): `ProfileDd05` re-measured all four loop variants on a quiet
+    * sf0.1): a one-off profiler re-measured all four loop variants on a quiet
     * box, min-of-4 round-robin, full dd05 pipeline. Shipped form (eager
     * seed ckpt + per-round ckpt) 1.44 s; lazy-seed + per-round ckpt
     * 1.49 s; r7 form (cached seed + per-round cache+count) 1.89 s —
@@ -176,7 +171,6 @@ object Dedup {
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
-      lastCcRounds.set(iter + 1)
       val neighborMin = undirected
         .join(labels.withColumnRenamed("doc_id", "id_b"), "id_b")
         .groupBy(col("id_a").as("doc_id"))
@@ -256,7 +250,6 @@ object Dedup {
     var iter = 0
     var done = eCount == 0L
     while (!done && iter < maxIter) {
-      lastCcRounds.set(iter + 1)
       // large-star: m(u) = min(Γ(u) ∪ {u}); emit (v, m(u)) for v > u
       val und = e.select(col("hi").as("u"), col("lo").as("v"))
         .unionByName(e.select(col("lo").as("u"), col("hi").as("v")))
@@ -796,7 +789,7 @@ object Dedup {
       // already shares that shuffle — the plan carries ONE parquet scan +
       // ONE window. The r3-era cache (added when the df count was a
       // groupBy + join-back with nothing reusable) cost ~0.5 s at sf0.1
-      // by the round-7 stage profile (ProfileDd06: materializing ~1.9 M
+      // by the round-7 stage profile (materializing ~1.9 M
       // exploded postings rows into storage AND hiding the exchange from
       // reuse): cached 1.25 s quiet vs uncached 0.78 s. At 100 TB the
       // same logic holds — a shuffle is re-read per consumer for free;

@@ -340,10 +340,8 @@ object Similarity {
     * probed fraction tracks the ball volume, not k. */
   /** ss21's body over an arbitrary (vec_id, embedding) frame: kG nearest
     * same-cell neighbors per corpus vector under ss14-trained cells (see
-    * the ss21 entry's scaladoc for the full shape argument). Extracted so
-    * SoakAnn can price the cell-local pair join's (n/k)² per-cell bound
-    * on a large clustered corpus, hot-cell variant included. Unordered —
-    * the declared query adds its own orderBy. */
+    * the ss21 entry's scaladoc for the full shape argument); ss22 seeds
+    * from it. Unordered — the declared query adds its own orderBy. */
   private[graft] def knnGraphEdges(e: DataFrame, k: Int = 8, kG: Int = 4): DataFrame = {
     val feats = intFeatures(e)
     val cents = fixedPointCentroids(feats, k, iters = 2)
@@ -1019,7 +1017,7 @@ object Similarity {
       val e = emb(s, dir).withColumn("nrm", l2norm("v"))
       val cents = ivfCells(s, dir).withColumn("cnrm", l2norm("cv"))
       val wAssign = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cell"))
-      // NO cache, measured (r7 ProfileQ CLEAR=1): the three consumers do
+      // NO cache, measured (r7, caches dropped between reps): the three consumers do
       // re-run the assignment window above the reused exchange, but at
       // any scale the window input is corpus × 10 centroid rows of
       // fixed-width doubles and caching measured a wash (~1.1 s both

@@ -239,7 +239,7 @@ object TextAnalysis {
     // text — at 100 TB, the difference between shuffling the corpus's
     // text and shuffling a fixed-width index. Same cap (64), same
     // threshold (>= 3). TextAnalysisSpec asserts exact pair-set equality
-    // on the gate corpus, SoakCounts the same through 2.6M grams at 10x.
+    // on the gate corpus (and held through 2.6M grams at 10x, SOAK_r07).
     // Rows-only (no xxhash64 in DuckDB).
     "tx12_decontaminate_hashed" -> ((s, dir) => {
       val minShared = 3
@@ -469,8 +469,7 @@ object TextAnalysis {
     // n_tokens_kept); rerun ⇒ byte-identical shards. Hash-exact under
     // dd10's recall license; every other stage mirrors from first
     // principles.
-    "qp04_decontaminated_manifest" -> ((s, dir) =>
-      decontaminatedManifest(s, dir, evalMod = 10)),
+    "qp04_decontaminated_manifest" -> ((s, dir) => decontaminatedManifest(s, dir)),
 
     // The GOPHER-screened manifest (qp06, r14) — the heuristic pre-dedup
     // screen as production runs it, composed end-to-end as ONE declared
@@ -1822,16 +1821,10 @@ object TextAnalysis {
         sum("nw").cast("int").as("n_contam_windows"))
   }
 
-  /** qp04's full pipeline with the eval fold boundary as a parameter
-    * (`evalMod`: eval = doc_id % evalMod == 0). The declared query runs
-    * evalMod=10 — the 10% held-out slice every tx30-family query
-    * freezes; [[graft.SoakQp04]] runs evalMod=2 so HALF the corpus is
-    * eval and the decontamination stage dominates the composed cost
-    * (the r13 verdict's hot-eval soak ask). Everything else is
-    * byte-identical to the declared query — the soak prices the real
-    * plan, not a variant. */
-  private[graft] def decontaminatedManifest(
-      s: SparkSession, dir: String, evalMod: Int): DataFrame = {
+  /** qp04's full pipeline. Eval is doc_id % 10 == 0, the 10% held-out
+    * slice every tx30-family query freezes. */
+  private def decontaminatedManifest(s: SparkSession, dir: String): DataFrame = {
+    val evalMod = 10
     val W = org.apache.spark.sql.expressions.Window
     val K = Dedup.substringK
     val docs = table(s, dir, "documents")
@@ -1875,24 +1868,6 @@ object TextAnalysis {
         row_number().over(W.partitionBy("shard").orderBy("h", "doc_id")))
       .select("doc_id", "shard", "pos", "n_tokens_kept")
       .orderBy("doc_id")
-  }
-
-  /** The hot-eval soak's shape diagnostic: per-train-doc flagged-window
-    * mass under an `evalMod` fold — the row count entering
-    * [[contamSpanStats]]'s doc-partitioned window per doc_id. The
-    * span-merge window "holds" at a hot eval slice iff this stays
-    * bounded by each doc's own window count (≤ n_ws − K + 1): the
-    * partition key is doc_id, so the worst partition is one doc's own
-    * windows regardless of how hot the eval side gets. */
-  private[graft] def contamOccPerDoc(
-      s: SparkSession, dir: String, evalMod: Int): DataFrame = {
-    val idx = Dedup.ddWinIndexPath(s, dir)
-    val wins = Tables.parquet(s, s"$idx/wins")
-      .select(col("doc_id"), col("pos"), col("h"))
-    val evalH = wins.filter(col("doc_id") % evalMod === 0).select("h").distinct()
-    wins.filter(col("doc_id") % evalMod =!= 0)
-      .join(evalH, Seq("h"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_flagged"))
   }
 
   /** tx33's machinery over an arbitrary documents frame — the Rae 2021

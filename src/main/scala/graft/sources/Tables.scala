@@ -51,8 +51,9 @@ object Tables {
     // flag: both shapes normalize to the session-UTC TimestampType the
     // downstream operators (windows, as-of joins) were built against.
     // nanosAsLong is part of the schema memo's key, so the memoized schema
-    // is the one inferred under it.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // is the one inferred under it. Sessions.build sets it at session
+    // start; this set changes only a session built elsewhere.
+    spark.conf.set(graft.Sessions.NanosAsLong, "true")
     val raw = parquet(spark, s"$dir/events.parquet")
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     raw.schema("ts").dataType match {

@@ -161,50 +161,25 @@ class EtlPipelineSpec extends SparkSpec with EtlFixtures {
     // Guards the emptiness probe against a return of the full pre-pass: with
     // a non-empty platform that has no dedup key, the probe is a single
     // limit-1 job with no exchange, so the dedup shuffles run only in the load.
-    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-    import org.apache.spark.scheduler._
-    val phaseKey = "graft.test.etl.phase"
-    val jobPhase = new ConcurrentHashMap[Int, String]()
-    val stagePhase = new ConcurrentHashMap[Int, String]()
-    val shuffleWritten = new ConcurrentHashMap[Int, java.lang.Long]()
-    val loadDone = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(phaseKey))).foreach { ph =>
-          jobPhase.put(e.jobId, ph)
-          e.stageIds.foreach(stagePhase.put(_, ph))
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        shuffleWritten.put(e.stageInfo.stageId,
-          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      // the bus delivers in order: once a load job has ended, every event
-      // of the jobs before the sink has been delivered too
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (jobPhase.get(e.jobId) == "load") loadDone.countDown()
-    }
-    val sc = spark.sparkContext
     val out = java.nio.file.Files.createTempDirectory("etl-guard").toString
-    sc.addSparkListener(listener)
+    val profile = QueryProfile.attach(spark)
     try {
-      sc.setLocalProperty(phaseKey, "pre")
-      val report = Pipeline.runReport(
-        Map("domclick" -> domclickRaw, "yandex" -> yandexRaw, "avito" -> avitoRaw),
-        now = fixedNow) { df =>
-        sc.setLocalProperty(phaseKey, "load")
-        df.write.mode("overwrite").parquet(out)
+      // the pre span's counts as the sink starts: everything before the sink
+      var pre = QueryProfile.Counts()
+      val report = profile.span("pre") {
+        Pipeline.runReport(
+          Map("domclick" -> domclickRaw, "yandex" -> yandexRaw, "avito" -> avitoRaw),
+          now = fixedNow) { df =>
+          pre = profile.counts("pre")
+          profile.span("load")(df.write.mode("overwrite").parquet(out))
+        }
       }
       assert(report.status == "success" && report.totalRows == 5L)
-      assert(loadDone.await(60, TimeUnit.SECONDS), "no load job end event")
-    } finally {
-      sc.setLocalProperty(phaseKey, null)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    val preJobs = jobPhase.asScala.filter(_._2 == "pre").keys
-    val preStages = stagePhase.asScala.filter(_._2 == "pre").keys
-    val preShuffle = preStages.toSeq.map(s => Option(shuffleWritten.get(s)).fold(0L)(_.longValue)).sum
-    assert(preJobs.size <= 1, s"${preJobs.size} jobs ran before the sink")
-    assert(preShuffle == 0L, s"stages before the sink wrote $preShuffle shuffle bytes")
+      assert(profile.counts("load").jobs >= 1, "no load job seen")
+      assert(pre.jobs <= 1, s"${pre.jobs} jobs ran before the sink")
+      assert(pre.shuffleWriteBytes == 0L,
+        s"stages before the sink wrote ${pre.shuffleWriteBytes} shuffle bytes")
+    } finally profile.close()
   }
 
   test("the full pipeline runs unchanged per micro-batch under streaming") {

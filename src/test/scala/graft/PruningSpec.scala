@@ -9,7 +9,8 @@ import graft.sources.Tables
 /** Scan-efficiency assertions: partition pruning on a partitioned layout —
   * at 100 TB this is the difference between reading one directory and
   * reading the lake. (Predicate pushdown to parquet row groups is asserted
-  * via graft.Explain's PushedFilters output; q02 is the oracle query.) */
+  * via graft.Profile's printed scan nodes (PushedFilters); q02 is the
+  * oracle query.) */
 class PruningSpec extends SparkSpec {
 
   test("partitionBy layout prunes non-matching partitions at the scan") {

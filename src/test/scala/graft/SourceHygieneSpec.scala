@@ -68,4 +68,26 @@ class SourceHygieneSpec extends AnyFunSuite {
       Seq("operators"))
     assert(bad.isEmpty, s"per-corpus state outside Artifacts:\n${bad.mkString("\n")}")
   }
+
+  /** Lines of `src/main/scala/graft` holding `token` outside the files named `allowed`. */
+  private def graftLinesWith(token: String, allowed: Set[String]): Seq[String] =
+    engineLinesWith(Seq(token), Seq("")).filterNot { hit =>
+      allowed.exists(f => hit.startsWith(s"src/main/scala/graft/$f.scala:"))
+    }
+
+  test("graft mains are Verify, Profile and Demo only") {
+    // a question about one query is a graft.Profile run, not a new main
+    val bad = graftLinesWith("def main(", Set("Verify", "Profile", "Demo"))
+    assert(bad.isEmpty, s"mains outside Verify/Profile/Demo:\n${bad.mkString("\n")}")
+  }
+
+  test("QueryProfile is the one Spark listener") {
+    val bad = graftLinesWith("addSparkListener", Set("QueryProfile"))
+    assert(bad.isEmpty, s"listeners outside QueryProfile:\n${bad.mkString("\n")}")
+  }
+
+  test("Sessions is the one reader of the environment") {
+    val bad = graftLinesWith("sys.env", Set("Sessions"))
+    assert(bad.isEmpty, s"environment reads outside Sessions:\n${bad.mkString("\n")}")
+  }
 }

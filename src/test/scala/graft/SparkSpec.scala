@@ -18,6 +18,8 @@ object TestSpark {
       // the engine's codegen cache size (static: the first session in the
       // JVM sets it)
       .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toLong)
+      // set at session start, not at the first events read (see Sessions)
+      .config(Sessions.NanosAsLong, "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

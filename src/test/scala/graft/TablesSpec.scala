@@ -4,7 +4,6 @@ import java.nio.file.{Files, StandardOpenOption}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType, TimestampType}
 
@@ -17,37 +16,13 @@ import graft.sources.{Artifacts, Tables}
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Jobs started while `body` runs, counted by a listener keyed by a local
-    * property. A fence job runs after `body`; the bus delivers in order, so
-    * once the fence has ended every earlier job start has been seen. */
+  /** Jobs started while `body` runs: the jobs of one [[QueryProfile]] span. */
   private def jobsStartedBy(body: => Unit): Int = {
-    val key = "graft.test.tables.phase"
-    val jobs = new AtomicInteger()
-    val fenceJobs = ConcurrentHashMap.newKeySet[Int]()
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some("body") => jobs.incrementAndGet()
-          case Some("fence") => fenceJobs.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (fenceJobs.contains(e.jobId)) fenced.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
+    val profile = QueryProfile.attach(spark)
     try {
-      sc.setLocalProperty(key, "body")
-      body
-      sc.setLocalProperty(key, "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, TimeUnit.SECONDS), "no fence job end event")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
+      profile.span("body")(body)
+      profile.counts("body").jobs
+    } finally profile.close()
   }
 
   private def tmpDir(prefix: String): String = Files.createTempDirectory(prefix).toString
@@ -109,6 +84,20 @@ class TablesSpec extends SparkSpec {
         assert(got == expected, s"$gen $pass read")
       }
     }
+  }
+
+  test("a table schema built before an events read starts no job when read after it") {
+    // the session starts with the conf events needs, so the first events
+    // read changes no fingerprint
+    val dir = tmpDir("tables-before-events")
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+    writeRaw(s"$dir/events.parquet",
+        "message events { required int64 event_id; required int64 ts (TIMESTAMP(MICROS,false)); }") {
+      g => g.append("event_id", 1L).append("ts", 1700000000123456L)
+    }
+    assert(jobsStartedBy(Tables.table(spark, dir, "t")) == 1, "the first read infers")
+    assert(jobsStartedBy(Tables.events(spark, dir)) == 1, "the first events read infers")
+    assert(jobsStartedBy(Tables.table(spark, dir, "t")) == 0)
   }
 
   test("the e17 partitioned read keeps lang as a partition column and PartitionFilter") {
