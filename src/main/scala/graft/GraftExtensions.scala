@@ -42,6 +42,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.eval().asInstanceOf[Number].intValue()
   }
 
+  private def stringArg(e: Expression, fn: String, pos: Int): String = {
+    require(e.foldable, s"$fn: argument $pos must be a literal string")
+    String.valueOf(e.eval())
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     def reg(name: String, arity: Range)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
@@ -59,6 +64,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
 
     reg("uuid5", 1 to 1)(a => graft.functions.Uuid5(a.head))
+    reg("py_list_literal", 1 to 1)(a => graft.functions.PyListLiteral(a.head))
+    reg("prefix_each", 2 to 2)(a =>
+      graft.functions.PrefixEach(a(1), stringArg(a(0), "prefix_each", 1)))
     reg("dot_product", 2 to 2)(a => SketchExprs.DotProduct(a(0), a(1)))
     reg("long_sqdist", 2 to 2)(a => SketchExprs.LongSqDist(a(0), a(1)))
     reg("pack_ints", 1 to 1)(a => SketchExprs.PackInts(a.head))

@@ -23,13 +23,18 @@ import graft.functions.EtlFunctions
   */
 object Canonical {
 
-  /** fill: value used by the final cast's null-fill (None = keep null). */
+  /** fill: value used by the final cast's null-fill (None = keep null).
+    * perListing: the values are (nearly) unique per listing: keys, URLs,
+    * free text, coordinates and money amounts. A dictionary of them is
+    * larger than the values it encodes, so the parquet sink writes these
+    * columns plain ([[Pipeline.Sinks.parquet]]). */
   final case class Field(
       pretty: String,
       snake: String,
       dataType: DataType,
       fill: Option[Any] = None,
-      domain: Option[Seq[String]] = None)
+      domain: Option[Seq[String]] = None,
+      perListing: Boolean = false)
 
   private val D = DoubleType
   private val S = StringType
@@ -49,21 +54,21 @@ object Canonical {
 
   /** All 50 canonical fields in `CH_FIELD_MAPPING` order. */
   val fields: Seq[Field] = Seq(
-    Field("Object ID", "listing_id", L, fill = Some(0L)),
-    Field("listing_url", "listing_url", S, fill = Some("")),
-    Field("Price", "price", D, fill = Some(0.0)),
-    Field("Price per sqm", "price_per_sqm", D, fill = Some(0.0)),
+    Field("Object ID", "listing_id", L, fill = Some(0L), perListing = true),
+    Field("listing_url", "listing_url", S, fill = Some(""), perListing = true),
+    Field("Price", "price", D, fill = Some(0.0), perListing = true),
+    Field("Price per sqm", "price_per_sqm", D, fill = Some(0.0), perListing = true),
     Field("Mortgage Rate", "mortgage_rate", FloatType, fill = Some(0.0f)),
     Field("Address", "address", S, fill = Some("")),
-    Field("Address ID", "address_id", L, fill = Some(0L)),
+    Field("Address ID", "address_id", L, fill = Some(0L), perListing = true),
     Field("Area", "area", D, fill = Some(0.0)),
     Field("Rooms", "rooms", ShortType, fill = Some(0)),
     Field("Floor", "floor", ShortType, fill = Some(0)),
-    Field("Description", "description", S, fill = Some("")),
+    Field("Description", "description", S, fill = Some(""), perListing = true),
     Field("Published Date", "published_date", TimestampType, fill = Some(epoch)),
     Field("Updated Date", "updated_date", TimestampType, fill = Some(epoch)),
-    Field("Seller ID", "seller_id", L, fill = Some(0L)),
-    Field("Seller Name Hash", "seller_name_hash", S, fill = Some("")),
+    Field("Seller ID", "seller_id", L, fill = Some(0L), perListing = true),
+    Field("Seller Name Hash", "seller_name_hash", S, fill = Some(""), perListing = true),
     Field("Company Name", "company_name", S, fill = Some("")),
     Field("Company ID", "company_id", L, fill = Some(0L)),
     Field("Property Type", "property_type", S, fill = Some("Unknown"), domain = Some(propertyTypes)),
@@ -75,22 +80,23 @@ object Canonical {
     Field("Placement Paid", "placement_paid", ShortType, fill = Some(0)),
     Field("Big Card", "big_card", ShortType, fill = Some(0)),
     Field("Pin Color", "pin_color", ShortType, fill = Some(0)),
-    Field("Longitude", "longitude", D, fill = Some(0.0)),
-    Field("Latitude", "latitude", D, fill = Some(0.0)),
+    Field("Longitude", "longitude", D, fill = Some(0.0), perListing = true),
+    Field("Latitude", "latitude", D, fill = Some(0.0), perListing = true),
     Field("Subway Distances", "subway_distances", ArrayType(D), fill = Some(Array.empty[Double])),
     Field("Subway Names", "subway_names", ArrayType(S), fill = Some(Array.empty[String])),
-    Field("Photos URLs", "photo_urls", ArrayType(S), fill = Some(Array.empty[String])),
-    Field("Monthly Payment", "monthly_payment", D, fill = Some(0.0)),
+    Field("Photos URLs", "photo_urls", ArrayType(S), fill = Some(Array.empty[String]),
+      perListing = true),
+    Field("Monthly Payment", "monthly_payment", D, fill = Some(0.0), perListing = true),
     Field("Advance Payment", "advance_payment", D, fill = Some(0.0)),
     Field("Auction Status", "auction_status", D, fill = Some(0.0)),
-    Field("uid", "uid", S), // derived: UUIDv5(listing_id _ platform_id)
+    Field("uid", "uid", S, perListing = true), // derived: UUIDv5(listing_id _ platform_id)
     Field("platform_id", "platform_id", ShortType, fill = Some(0)),
     Field("created_at", "created_at", TimestampType, fill = Some(epoch)),
     Field("seller_type", "seller_type", S, fill = Some("UNKNOWN"), domain = Some(sellerTypes)),
     Field("flat_type", "flat_type", S, fill = Some("UNKNOWN"), domain = Some(flatTypes)),
     Field("height", "height", D, fill = Some(0.0)),
     Field("area_rooms", "area_rooms", D, fill = Some(0.0)),
-    Field("previous_price", "previous_price", D, fill = Some(0.0)),
+    Field("previous_price", "previous_price", D, fill = Some(0.0), perListing = true),
     Field("renovation_offer", "renovation_offer", S, fill = Some("")),
     Field("balcony_type", "balcony_type", S, fill = Some("UNKNOWN"), domain = Some(balconyTypes)),
     Field("window_view", "window_view", S, fill = Some("UNKNOWN"), domain = Some(windowViews)),

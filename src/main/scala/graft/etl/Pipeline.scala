@@ -183,8 +183,20 @@ object Pipeline {
     * platform so downstream reads prune); CSV mirrors the reference's test
     * loader; JDBC mirrors the ClickHouse truncate-and-reload semantics. */
   object Sinks {
+    /** Per-listing columns ([[Canonical.Field]]`.perListing`) are written
+      * without a dictionary: parquet-mr would build one for the whole file
+      * and then drop it for plain encoding when the file closes. */
     def parquet(df: DataFrame, path: String): Unit =
-      df.write.mode(SaveMode.Overwrite).partitionBy("platform_id").parquet(path)
+      Canonical.fields.filter(_.perListing).foldLeft(df.write) { (w, f) =>
+        w.option(s"parquet.enable.dictionary#${columnPath(f)}", "false")
+      }.mode(SaveMode.Overwrite).partitionBy("platform_id").parquet(path)
+
+    /** The parquet column path of `f`'s values: an array's sit under the
+      * three-level list group Spark writes. */
+    def columnPath(f: Canonical.Field): String = f.dataType match {
+      case _: org.apache.spark.sql.types.ArrayType => s"${f.snake}.list.element"
+      case _ => f.snake
+    }
 
     /** Reference CSVLoader (`src/etl/loading.py:56-75`): single header CSV.
       * coalesce(1) is test-scale only, as in the reference. */

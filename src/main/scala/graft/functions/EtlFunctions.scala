@@ -2,14 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Columnar re-expressions of the reference's row-wise ETL primitives
   * (SURVEY.md §2 Part A, A6–A21). Every function returns a Catalyst
-  * `Column` built from codegen'd built-ins — zero row UDFs — so whole-stage
-  * codegen applies end-to-end at 100 TB scale. Coercions use the `try_`
-  * forms: Spark 4 runs ANSI-on by default, and the reference's semantics
-  * (`errors='coerce'`, bad input → null) are exactly try_cast.
+  * `Column` of code-generated expressions: built-ins, or the kernels in
+  * [[ListKernels]] where the built-in (`from_json`, `transform`, `filter`)
+  * is `CodegenFallback`. There are no row UDFs, and each platform's
+  * derivation projection compiles into one whole-stage codegen stage
+  * (`EtlCodegenSpec`). Coercions use the `try_` forms: Spark 4 runs ANSI-on
+  * by default, and the reference's semantics (`errors='coerce'`, bad input
+  * → null) are exactly try_cast.
   *
   * Reference citations are to `/root/reference/` (RealValueAI/real-value-etl).
   */
@@ -53,26 +57,31 @@ object EtlFunctions {
 
   /** A17 — tolerant Python-list-literal parse: `"['a', 'b']"` → array,
     * anything else → []. Ref: src/etl/transformation.py:204-212 (`_safe_eval`).
-    * Single→double quote rewrite feeds Jackson; malformed → null → []. */
+    * The result is that of the single→double quote rewrite fed to
+    * `from_json` (malformed → null → []), see [[PyListLiteral]]. */
   def safeListParse(c: Column): Column =
-    coalesce(
-      from_json(regexp_replace(c, "'", "\""), ArrayType(StringType)),
-      array().cast(ArrayType(StringType)))
+    ColumnBridge.column(PyListLiteral(ColumnBridge.expression(c)))
 
   /** A18 — element-wise URL prefix over an array column, stripping leading
-    * slashes first (Yandex variant). Ref: src/etl/transformation.py:157-159,
-    * 185-187,317-319,357-359. Higher-order `transform` — no UDF, no explode. */
+    * slashes first (Yandex variant); a null array gives []. Ref:
+    * src/etl/transformation.py:157-159,185-187,317-319,357-359. */
   def prefixEach(base: String, c: Column): Column =
-    transform(coalesce(c, array().cast(ArrayType(StringType))),
-      x => concat(lit(base), regexp_replace(x, "^/+", "")))
+    ColumnBridge.column(PrefixEach(ColumnBridge.expression(c), base))
 
   /** A19 — array from scalar columns, dropping null/blank entries.
     * Ref: src/etl/transformation.py:313-315,467-481. */
   def arrayCompactStr(cols: Column*): Column =
-    filter(array(cols: _*), x => x.isNotNull && trim(x) =!= "")
+    compact(cols, x => x.isNotNull && trim(x) =!= "")
 
   def arrayCompactNum(cols: Column*): Column =
-    filter(array(cols: _*), x => x.isNotNull && !isnan(x))
+    compact(cols, x => x.isNotNull && !isnan(x))
+
+  /** `filter(array(cols), keep)` without the lambda, which is not
+    * code-generated: the concatenation of `[x]` for each kept `x` and of
+    * `[]` for the rest. `array_repeat(x, 0)` is that `[]` with the type of
+    * `[x]`, so the result has the type of `array(cols)`. */
+  private def compact(cols: Seq[Column], keep: Column => Column): Column =
+    concat(cols.map(x => when(keep(x), array(x)).otherwise(array_repeat(x, 0))): _*)
 
   /** A20 — single-key map → JSON string `{metro: [transport, minutes]}`.
     * Ref: src/etl/transformation.py:340-346. */

@@ -208,8 +208,10 @@ object EtlQueries {
         .orderBy("doc_id")
     }),
 
-    // A18/A19 — higher-order array transform/filter (no explode, no UDF);
-    // arrays serialized for the pandas-based gate (see e05 note).
+    // A18/A19 — element-wise prefix and null/blank compaction of arrays,
+    // both code-generated (no explode, no UDF, no lambda); the name keeps
+    // the higher-order functions they replaced. Arrays serialized for the
+    // pandas-based gate (see e05 note).
     "e06_array_hof" -> ((s, dir) => {
       val base = "https://img.example.com/"
       table(s, dir, "documents").select(

@@ -18,8 +18,12 @@ class FunctionRegistrySpec extends SparkSpec {
              size(word_shingles('a b c d', 3)) AS nsh,
              size(minhash_sig(word_shingles('a b c d'), 16)) AS k,
              long_sqdist(array(1L, 5L, -2L), array(4L, 1L, 0L)) AS lsd,
-             long_sqdist(array(1000000L, 2000000L), array(0L, 0L)) AS lsdBig
+             long_sqdist(array(1000000L, 2000000L), array(0L, 0L)) AS lsdBig,
+             py_list_literal("['a', 'b']") AS pl,
+             prefix_each('https:', array('//x/1.jpg', NULL)) AS pe
     """).collect()(0)
+    assert(r.getSeq[String](r.fieldIndex("pl")) == Seq("a", "b"))
+    assert(r.getSeq[String](r.fieldIndex("pe")) == Seq("https:x/1.jpg", null))
     assert(r.getAs[String]("u") == Uuid5Util.v5("42_1"))
     assert(r.getAs[Double]("dp") == 11.0)
     assert(r.getAs[Double]("nrm") == 5.0)

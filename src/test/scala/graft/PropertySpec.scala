@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Properties}
 
 import graft.functions.EtlFunctions._
@@ -24,6 +26,135 @@ object EtlProperties extends Properties("graft.etl") {
         .select(numCoerce($"x").as("n"), tsNormalize($"x").as("t"),
           flooredLong($"x").as("f"), safeListParse($"x").as("l"))
       df.collect().length == xs.length // totality: every row produced
+    }
+
+  // The list helpers' former forms over the built-ins `from_json`,
+  // `transform` and `filter`: the reference the kernels must equal.
+  private def refListParse(c: Column): Column =
+    coalesce(from_json(regexp_replace(c, "'", "\""), ArrayType(StringType)),
+      array().cast(ArrayType(StringType)))
+  private def refPrefixEach(base: String, c: Column): Column =
+    transform(coalesce(c, array().cast(ArrayType(StringType))),
+      x => concat(lit(base), regexp_replace(x, "^/+", "")))
+  private def refCompactStr(cols: Column*): Column =
+    filter(array(cols: _*), x => x.isNotNull && trim(x) =!= "")
+  private def refCompactNum(cols: Column*): Column =
+    filter(array(cols: _*), x => x.isNotNull && !isnan(x))
+
+  /** `rows` as a local relation (the optimizer evaluates a projection of it
+    * interpreted) and as an RDD scan (whole-stage code-generated). */
+  private def bothPaths(schema: StructType, rows: Seq[Row]): Seq[DataFrame] = Seq(
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))
+
+  /** Each (kernel, reference) pair gives equal values of equal type. */
+  private def agree(df: DataFrame, pairs: Seq[(Column, Column)]): Boolean = {
+    val out = df.select(pairs.zipWithIndex.flatMap { case ((k, r), i) =>
+      Seq(k.as(s"k$i"), r.as(s"r$i")) }: _*)
+    val types = pairs.indices.forall(i =>
+      out.schema(s"k$i").dataType == out.schema(s"r$i").dataType)
+    types && out.collect().forall(row =>
+      pairs.indices.forall(i => bits(row.get(2 * i)) == bits(row.get(2 * i + 1))))
+  }
+
+  /** A value compared bit for bit: NaN equals NaN, -0.0 differs from 0.0. */
+  private def bits(v: Any): Any = v match {
+    case s: scala.collection.Seq[_] => s.map(bits).toList
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case x => x
+  }
+
+  // Python-list-literal-like strings: quotes of both kinds inside elements,
+  // escapes, nested and truncated brackets, numbers in and out of the
+  // kernel's plain-number form, null, non-ASCII and whitespace.
+  private val listElement: Gen[String] = Gen.oneOf(
+    Gen.alphaNumStr.map(s => s"'$s'"),
+    Gen.asciiPrintableStr.map(s => s"'${s.take(6)}'"),
+    Gen.oneOf("'a\"b'", "'it''s'", "\"dq\"", "'a\\b'", "'a\\nb'", "'\\u0041'",
+      "'Арбатская'", "'日本'", "' sp ace '", "'/p/1.jpg'", "''", "'\t'", "'\u0001'",
+      "'a\nb'", "'é'"),
+    Gen.oneOf("350.0", "870.5", "-0", "-0.0", "0", "007", "1e3", "1E-2", "1.10", "3",
+      "-12", "1.", ".5", "-", "NaN", "Infinity", "null", "None", "true", "1.0E7",
+      "123456789.5", "0.1", "100.0", "12345678901234567890", "999999999999999999",
+      "-9223372036854775809", "+5", "0x1F"),
+    Gen.chooseNum(-1e7, 1e7).map(d => f"$d%.1f"),
+    Gen.chooseNum(Long.MinValue, Long.MaxValue).map(_.toString),
+    Gen.oneOf("[]", "['x', ['y']]", "[['a']]", "{}", "{'a': 1}", "[1, [2]]"))
+
+  private val listLiteral: Gen[String] = Gen.frequency(
+    8 -> (for {
+      elems <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, listElement))
+      seps <- Gen.listOfN(math.max(elems.size - 1, 0), Gen.frequency(
+        8 -> ", ", 3 -> ",", 1 -> " , ", 1 -> ",\n", 1 -> "", 1 -> ",,", 1 -> " ", 1 -> ";"))
+      open <- Gen.frequency(8 -> "[", 1 -> " [", 1 -> "[ ", 1 -> "", 1 -> "[[", 1 -> "\t[",
+        1 -> "\u00a0[", 1 -> "x[")
+      close <- Gen.frequency(8 -> "]", 1 -> "] ", 1 -> "", 1 -> "]]", 1 -> "] x",
+        1 -> " ]", 1 -> ",]", 1 -> "]\n")
+    } yield open + elems.zipAll(seps, "", "").map { case (e, s) => e + s }.mkString + close),
+    1 -> Gen.oneOf("", " ", "null", "None", "nope", "[", "]", "['a'", "'a']",
+      "[\"a\", 'b']", "['a\", \"b']", "[\"\"]", "[''']"),
+    1 -> Gen.asciiPrintableStr)
+
+  property("safeListParse equals its from_json form on list-literal-like strings") =
+    Prop.forAllNoShrink(Gen.listOfN(24, Gen.option(listLiteral))) { xs =>
+      val rows = xs.map(x => Row(x.orNull))
+      bothPaths(StructType(Seq(StructField("x", StringType))), rows).forall { df =>
+        agree(df, Seq(
+          safeListParse($"x") -> refListParse($"x"),
+          safeListParse($"x").try_cast(ArrayType(DoubleType)) ->
+            refListParse($"x").try_cast(ArrayType(DoubleType))))
+      }
+    }
+
+  property("flat lists of plain strings and numbers take the kernel, not from_json") =
+    Prop.forAllNoShrink(Gen.choose(0, 6).flatMap(Gen.listOfN(_, Gen.oneOf(
+      Gen.alphaNumStr.map(s => s"'$s'"), Gen.const("'Арбатская'"),
+      Gen.const("'/p/1_2.jpg'"), Gen.chooseNum(0.0, 1e4).map(d => f"$d%.1f"),
+      Gen.chooseNum(-1000L, 1000L).map(_.toString))))) { xs =>
+      val parsed = graft.functions.ListKernels.flatList(
+        org.apache.spark.unsafe.types.UTF8String.fromString(xs.mkString("[", ", ", "]")))
+      parsed != null && parsed.numElements() == xs.length
+    }
+
+  private val urlPath: Gen[String] = Gen.oneOf(
+    Gen.alphaNumStr, Gen.const(""), Gen.const("/"), Gen.const("//a/b.jpg"), Gen.const("///"),
+    Gen.const("/p/1.jpg"), Gen.const(" /x"), Gen.const("/фото.jpg"), Gen.const("a//b"),
+    Gen.asciiPrintableStr.map(_.take(8)))
+
+  property("prefixEach equals its transform form, null arrays and elements included") =
+    Prop.forAllNoShrink(Gen.listOfN(16, Gen.option(Gen.choose(0, 4).flatMap(
+        Gen.listOfN(_, Gen.option(urlPath)))))) { xs =>
+      val rows = xs.map(x => Row(x.map(_.map(_.orNull)).orNull))
+      bothPaths(StructType(Seq(StructField("a", ArrayType(StringType)))), rows).forall { df =>
+        agree(df, Seq(
+          prefixEach("https://img/", $"a") -> refPrefixEach("https://img/", $"a"),
+          prefixEach("https:", $"a") -> refPrefixEach("https:", $"a"),
+          prefixEach("p/", slice(split(try_element_at($"a", lit(1)), "/"), 1, 3)) ->
+            refPrefixEach("p/", slice(split(try_element_at($"a", lit(1)), "/"), 1, 3))))
+      }
+    }
+
+  property("arrayCompactStr/Num equal their filter forms, types included") =
+    Prop.forAllNoShrink(Gen.listOfN(16, for {
+      s <- Gen.listOfN(3, Gen.option(Gen.oneOf(Gen.alphaStr,
+        Gen.oneOf("", " ", "\t", " x ", "Арбат", "1.5", "NaN"))))
+      d <- Gen.listOfN(3, Gen.option(Gen.oneOf(Gen.chooseNum(-1e3, 1e3),
+        Gen.oneOf(Double.NaN, 0.0, -0.0, Double.PositiveInfinity))))
+    } yield s ++ d)) { xs =>
+      val schema = StructType(Seq("s1", "s2", "s3").map(StructField(_, StringType)) ++
+        Seq("d1", "d2", "d3").map(StructField(_, DoubleType)))
+      val rows = xs.map(x => Row(x.map(_.orNull): _*))
+      bothPaths(schema, rows).forall { df =>
+        agree(df, Seq(
+          arrayCompactStr($"s1", $"s2", $"s3") -> refCompactStr($"s1", $"s2", $"s3"),
+          arrayCompactStr($"s1") -> refCompactStr($"s1"),
+          arrayCompactStr($"s1", lit(null).cast(StringType), lit("")) ->
+            refCompactStr($"s1", lit(null).cast(StringType), lit("")),
+          arrayCompactStr(lit("a"), lit(" ")) -> refCompactStr(lit("a"), lit(" ")),
+          arrayCompactNum($"d1", $"d2", $"d3") -> refCompactNum($"d1", $"d2", $"d3"),
+          arrayCompactNum(numCoerce($"s1"), numCoerce($"s2")) ->
+            refCompactNum(numCoerce($"s1"), numCoerce($"s2"))))
+      }
     }
 
   property("union of N frames preserves total row count") =

@@ -2,15 +2,55 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.Pipeline
+import graft.etl.{Canonical, Pipeline}
 import graft.sources.Tables
 
 /** A29 CSV sink + A1 schema-declared CSV scan round-trip (the reference's
-  * test-mode loader path, src/etl/loading.py:56-75). */
-class SinksSpec extends SparkSpec {
+  * test-mode loader path, src/etl/loading.py:56-75), and the parquet sink's
+  * per-column encodings. */
+class SinksSpec extends SparkSpec with EtlFixtures {
+
+  test("parquet sink: per-listing columns carry no dictionary, enum columns keep one") {
+    // 400 copies of each kept DomClick row: every column repeats enough
+    // for parquet-mr to keep a dictionary unless it is told not to build one
+    val copies = domclickRaw.crossJoin(spark.range(400).toDF("copy")).drop("copy")
+    val df = Pipeline.run(Map("domclick" -> copies))
+    val out = Files.createTempDirectory("graft-sink-parquet").toString
+    Pipeline.Sinks.parquet(df, out)
+
+    val conf = spark.sessionState.newHadoopConf()
+    val files = Files.walk(java.nio.file.Paths.get(out)).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    val dictionary: Map[String, Boolean] = files.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.hasDictionaryPage)
+      finally reader.close()
+    }.groupMapReduce(_._1)(_._2)(_ || _)
+    def path(f: Canonical.Field) = Pipeline.Sinks.columnPath(f)
+    val perListing = Canonical.fields.filter(_.perListing)
+    assert(perListing.size == 14)
+    assert(perListing.filter(f => dictionary(path(f))).isEmpty,
+      s"per-listing columns with a dictionary page: $dictionary")
+    val enums = Canonical.fields.filter(_.domain.isDefined)
+    assert(enums.filterNot(f => dictionary(path(f))).isEmpty,
+      s"enum-domain columns without a dictionary page: $dictionary")
+
+    val back = spark.read.parquet(out)
+      .select(Canonical.fields.map(f => col(f.snake).cast(f.dataType)): _*)
+    val sent = df.select(Canonical.snakeNames.map(col): _*)
+    assert(back.count() == 800L)
+    assert(back.exceptAll(sent).isEmpty && sent.exceptAll(back).isEmpty)
+  }
 
   test("csv sink writes a header file that the declared-schema reader round-trips") {
     val dir = Files.createTempDirectory("graft-sink").toString

@@ -88,16 +88,21 @@ class TablesSpec extends SparkSpec {
 
   test("a table schema built before an events read starts no job when read after it") {
     // the session starts with the conf events needs, so the first events
-    // read changes no fingerprint
+    // read changes no fingerprint. A new session starts from the confs the
+    // session was built with, so an earlier suite's events read, which sets
+    // the conf on the shared session, cannot stand in for them.
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption(Sessions.NanosAsLong).contains("true"),
+      s"${Sessions.NanosAsLong} is not set at session start")
     val dir = tmpDir("tables-before-events")
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
     writeRaw(s"$dir/events.parquet",
         "message events { required int64 event_id; required int64 ts (TIMESTAMP(MICROS,false)); }") {
       g => g.append("event_id", 1L).append("ts", 1700000000123456L)
     }
-    assert(jobsStartedBy(Tables.table(spark, dir, "t")) == 1, "the first read infers")
-    assert(jobsStartedBy(Tables.events(spark, dir)) == 1, "the first events read infers")
-    assert(jobsStartedBy(Tables.table(spark, dir, "t")) == 0)
+    assert(jobsStartedBy(Tables.table(fresh, dir, "t")) == 1, "the first read infers")
+    assert(jobsStartedBy(Tables.events(fresh, dir)) == 1, "the first events read infers")
+    assert(jobsStartedBy(Tables.table(fresh, dir, "t")) == 0)
   }
 
   test("the e17 partitioned read keeps lang as a partition column and PartitionFilter") {
